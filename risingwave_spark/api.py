@@ -14,16 +14,27 @@ Semantics reproduced:
   (reference Backfill executor) then stays incrementally maintained on
   every subsequent DML batch; the MV's current result is also registered
   in the catalog (MV-on-MV reads compose the same way).
+
+Propagation graph (reference stream-job fragment graph, `src/meta`):
+every producer — a table, an MV, a join step — holds one `downstream`
+list of `Edge`s. An edge names the MV that owns it and folds the
+producer's changelog batch into that MV's input. DROP / RENAME / ALTER
+unhook dependents by owner name, and after a DML batch only the MVs
+reachable from the written table are re-registered.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from risingwave_spark.streaming.mv import ChunkedState, MaterializedView, OP_COL, with_ops
+
+#: warehouse directory prefixes an MV's state may live under (one per MV kind)
+MV_STATE_PREFIXES = ("mv_", "jmv_", "umv_", "topn_", "owmv_", "eowc_", "eowcow_")
 
 
 def sub_now(sql: str, ts) -> str:
@@ -52,7 +63,7 @@ class Table:
         self.name = name
         self.pk = pk
         self.state = ChunkedState(spark, path, pk)
-        self.mvs: list["MaterializedViewHandle"] = []
+        self.downstream: list[Edge] = []
         #: TTL (reference e2e_test/ttl/ttl.slt, `retention_seconds` WITH
         #: option — APPEND ONLY tables only): rows expire by ingest-chunk
         #: commit time; reads skip expired chunks at FILE level.
@@ -94,108 +105,6 @@ class MaterializedViewHandle:
         self.view.result().createOrReplaceTempView(self.name)
 
 
-class StreamJoinMv:
-    """MV over a two-sided stream-stream join (reference
-    `create_mv.rs:87` planning onto `stream_hash_join.rs`): a
-    `RetractableStreamJoin` keeps the join itself incrementally correct
-    under inserts AND deletes on either side; a GROUP BY on top becomes a
-    downstream `MaterializedView` fed by the join's per-batch changelog
-    (−1 old affected rows / +1 recomputed — mv-on-mv.md); a plain
-    projection is applied over the maintained join result at read (the
-    join IS the materialized state; projection is stateless).
-
-    Scale posture: both levels are O(touched keys/buckets) per batch —
-    the join recomputes only affected join keys, the agg recomputes only
-    affected group keys, and each splices into its own bucketed MV."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        left_on: list[str],
-        right_on: list[str],
-        row_id_l,
-        row_id_r,
-        how: str,
-        cond: str | None,
-        keys: list[str] | None = None,
-        recompute=None,
-        project=None,
-        key_of=None,
-    ):
-        from risingwave_spark.streaming.join import RetractableStreamJoin
-
-        self.spark = spark
-        self.join = RetractableStreamJoin(
-            spark,
-            os.path.join(state_dir, "join"),
-            left_on,
-            right_on,
-            row_id_l,
-            row_id_r,
-            how=how,
-            cond=cond,
-        )
-        self.project = project
-        self.keys = keys or []
-        self.agg: MaterializedView | None = None
-        if keys is not None and recompute is not None:
-            ids_l = [row_id_l] if isinstance(row_id_l, str) else list(row_id_l)
-            ids_r = [row_id_r] if isinstance(row_id_r, str) else list(row_id_r)
-            # join-output row identity: both sides' pks (left-only for
-            # semi/anti, whose output has no right columns); outer-join
-            # null-padded ids are fine — ChunkedState tombstones match
-            # null-safe
-            row_ids = ids_l if how in ("left_semi", "left_anti") else ids_l + ids_r
-            self.agg = MaterializedView(
-                spark, os.path.join(state_dir, "agg"), keys, row_ids, recompute
-            )
-            self.agg.key_of = key_of
-            self.join.downstream.append(self.agg)
-
-    @property
-    def downstream(self) -> list:
-        """MV-on-MV over a join MV hangs off the deepest maintained level
-        (the agg if present, else the join itself) — its changelog is the
-        one that reflects this view's visible rows."""
-        return self.agg.downstream if self.agg is not None else self.join.downstream
-
-    # subscriptions/sinks (CREATE SUBSCRIPTION / CREATE SINK FROM mv)
-    # attach to the agg level's persisted changelog; a row-grain join MV
-    # has no persisted changelog yet — refuse loudly instead of silently
-    # never emitting.
-    @property
-    def emit_changelog(self) -> bool:
-        return self.agg.emit_changelog if self.agg is not None else False
-
-    @emit_changelog.setter
-    def emit_changelog(self, v: bool) -> None:
-        if self.agg is None:
-            raise ValueError(
-                "subscriptions/sinks on a row-grain stream-join MV are not "
-                "supported yet — add a GROUP BY level or subscribe upstream"
-            )
-        self.agg.emit_changelog = v
-
-    @property
-    def changelog_dir(self) -> str:
-        if self.agg is None:
-            raise ValueError("row-grain stream-join MV has no changelog log")
-        return self.agg.changelog_dir
-
-    def apply_left(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        self.join.apply(left=batch, batch_id=batch_id, batch_ns=batch_ns)
-
-    def apply_right(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        self.join.apply(right=batch, batch_id=batch_id, batch_ns=batch_ns)
-
-    def result(self) -> DataFrame:
-        if self.agg is not None:
-            return self.agg.result()
-        out = self.join.result()
-        return self.project(out) if self.project is not None else out
-
-
 class StreamJoinChainMv:
     """Left-deep cascade of retractable stream-stream joins — the
     reference's multi-way streaming join plan (`create_mv.rs:87` →
@@ -205,7 +114,8 @@ class StreamJoinChainMv:
     changelog (−1 old affected rows / +1 recomputed) feeds the next
     step's LEFT input, and an optional GROUP BY hangs a MaterializedView
     off the last step (mv-on-mv.md). DML — including deletes — on ANY
-    participating table keeps the whole chain exact.
+    participating table keeps the whole chain exact. A 2-input join is
+    a one-step chain.
 
     Scale posture: every level is O(touched join keys/buckets) per batch
     (each step recomputes only affected keys against bucket-pruned
@@ -284,72 +194,6 @@ class StreamJoinChainMv:
         return self.project(out) if self.project is not None else out
 
 
-class _JoinChainFeed:
-    """Upstream join's changelog chunk → the next join's LEFT input
-    (strips the upstream's internal __jk splice columns first)."""
-
-    def __init__(self, downstream_join):
-        self._j = downstream_join
-
-    def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        drop = [c for c in batch.columns if c.startswith("__jk")]
-        self._j.apply(left=batch.drop(*drop), batch_id=batch_id, batch_ns=batch_ns)
-
-
-class _ChainSideHandle:
-    """Per-table subscription of a StreamJoinChainMv: table 0 feeds the
-    first join's left input, table i>=1 feeds join i-1's right input.
-    `pre` is a pushed-down single-side filter (reference predicate
-    pushdown below the join): batches are filtered BEFORE folding, so
-    the join state never stores rows the predicate excludes."""
-
-    def __init__(self, name: str, join, side: str, pre: str | None = None, ren: dict | None = None):
-        self.name = name
-        self._join = join
-        self._side = side
-        self._pre = pre
-        self._ren = ren
-        self.view = self  # duck-type MaterializedViewHandle for _apply_dml
-
-    def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        batch = _ren_batch(batch, self._ren)
-        if self._pre:
-            batch = batch.filter(F.expr(self._pre))
-        if self._side == "left":
-            self._join.apply(left=batch, batch_id=batch_id, batch_ns=batch_ns)
-        else:
-            self._join.apply(right=batch, batch_id=batch_id, batch_ns=batch_ns)
-
-    def _register(self) -> None:
-        pass
-
-
-class _JoinSideHandle:
-    """Internal per-side subscription of a StreamJoinMv to a base table
-    (the join MV appears in BOTH tables' `mvs` lists; DML on either side
-    routes into the matching input of RetractableStreamJoin.apply)."""
-
-    def __init__(self, name: str, jmv: StreamJoinMv, side: str, pre: str | None = None, ren: dict | None = None):
-        self.name = name
-        self._jmv = jmv
-        self._side = side
-        self._pre = pre
-        self._ren = ren
-        self.view = self  # duck-type MaterializedViewHandle for _apply_dml
-
-    def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        batch = _ren_batch(batch, self._ren)
-        if self._pre:
-            batch = batch.filter(F.expr(self._pre))
-        if self._side == "left":
-            self._jmv.apply_left(batch, batch_id=batch_id, batch_ns=batch_ns)
-        else:
-            self._jmv.apply_right(batch, batch_id=batch_id, batch_ns=batch_ns)
-
-    def _register(self) -> None:  # the real handle registers the MV name
-        pass
-
-
 def _ren_pk(pk, ren: dict | None):
     if not ren:
         return pk
@@ -367,45 +211,42 @@ def _ren_batch(df: DataFrame, ren: dict | None) -> DataFrame:
     return df.select([F.col(c).alias(ren.get(c, c)) for c in df.columns])
 
 
-class _MvJoinFeed:
-    """Upstream MV's changelog chunk → one side of a stream join —
-    MV-as-join-input (reference mv-on-mv.md composed with the multi-way
-    streaming join plan, `create_mv.rs:87`): a CREATE MV may join
-    another MV, which is the desugared form of subqueries / CTEs /
-    stacked views in MV bodies (e.g. every subquery-bearing
-    `e2e_test/streaming/tpch/views/*.slt.part`). The upstream MV's
-    per-batch Update-pair changelog (−1 old / +1 recomputed) folds into
-    the join side's state exactly like table DML does."""
+class Edge:
+    """One subscription in the propagation graph. A producer (table, MV,
+    join step) hands each folded batch's changelog to every edge in its
+    `downstream` list; the edge folds it into the input of the MV named
+    `owner`. Engine._unhook drops edges by owner name, and
+    Engine._closure walks them to find the MVs a batch can move. An
+    owner of None marks a link inside one MV (the TopN delta probe),
+    which no walk reaches."""
 
-    def __init__(self, join, side: str, pre: str | None = None, ren: dict | None = None):
-        self._join = join
-        self._side = side
-        self._pre = pre
-        self._ren = ren
+    __slots__ = ("owner", "_fold")
+
+    def __init__(self, owner: str | None, fold):
+        self.owner = owner
+        self._fold = fold  # (batch, batch_id, batch_ns) -> None
 
     def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
+        self._fold(batch, batch_id, batch_ns)
+
+
+def _join_edge(owner: str, join, side: str, pre: str | None = None, ren: dict | None = None) -> Edge:
+    """Edge into one input ("left"/"right") of a stream-join step —
+    fed by a base table's DML, an upstream MV's changelog (MV-as-join-
+    input, the desugared form of subqueries / CTEs / stacked views in MV
+    bodies) or the previous chain step. The upstream's internal __jk
+    splice columns are stripped, a self-join role's rename applied, and
+    `pre` — a pushed-down single-side filter (reference predicate
+    pushdown below the join) — drops rows BEFORE they reach join state."""
+
+    def fold(batch: DataFrame, batch_id, batch_ns) -> None:
         drop = [c for c in batch.columns if c.startswith("__jk")]
-        b = batch.drop(*drop) if drop else batch
-        b = _ren_batch(b, self._ren)
-        if self._pre:
-            b = b.filter(F.expr(self._pre))
-        if self._side == "left":
-            self._join.apply(left=b, batch_id=batch_id, batch_ns=batch_ns)
-        else:
-            self._join.apply(right=b, batch_id=batch_id, batch_ns=batch_ns)
+        b = _ren_batch(batch.drop(*drop) if drop else batch, ren)
+        if pre:
+            b = b.filter(F.expr(pre))
+        join.apply(**{side: b}, batch_id=batch_id, batch_ns=batch_ns)
 
-
-class _TopNDeltaProbe:
-    """Sits in the inner view's downstream list and captures each fold's
-    OUTPUT changelog — the frame the TopN wrapper's threshold skip tests
-    (it must test output rows, not the upstream input batch, because the
-    order expressions are bound over the MV's output columns)."""
-
-    def __init__(self):
-        self.last: DataFrame | None = None
-
-    def apply_batch(self, batch: DataFrame, batch_id=None, batch_ns=None) -> None:
-        self.last = batch
+    return Edge(owner, fold)
 
 
 class TopNReadMv:
@@ -439,7 +280,8 @@ class TopNReadMv:
         self._dir = state_dir
         self._downstream: list = []
         self._emit = False
-        self._probe: "_TopNDeltaProbe | None" = None
+        self._probed = False
+        self._delta: DataFrame | None = None  # inner fold's output changelog
         # metrics: threshold-cache skips vs full ordered-state diffs
         self._skips = 0
         self._full_diffs = 0
@@ -624,18 +466,20 @@ class TopNReadMv:
         TakeOrderedAndProject when no row can enter or leave the
         top-k."""
         if (
-            self._probe is None
+            not self._probed
             and self._limit is not None
             and (self._downstream or self._emit)
             and hasattr(self._inner, "downstream")
         ):
-            self._probe = _TopNDeltaProbe()
-            self._inner.downstream.append(self._probe)
+            self._probed = True
+            self._inner.downstream.append(Edge(None, self._capture))
+
+    def _capture(self, delta: DataFrame, _batch_id, _batch_ns) -> None:
+        self._delta = delta
 
     def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
         self._ensure_probe()
-        if self._probe is not None:
-            self._probe.last = None
+        self._delta = None
         self._inner.apply_batch(batch, batch_id=batch_id, batch_ns=batch_ns)
         self._emit_membership_delta(batch_id=batch_id, batch_ns=batch_ns)
 
@@ -643,8 +487,7 @@ class TopNReadMv:
         # Now-executor tick (temporal-filter MVs): time moving can also
         # move rows in/out of the top-k
         self._ensure_probe()
-        if self._probe is not None:
-            self._probe.last = None
+        self._delta = None
         self._inner.retouch(affected)
         self._emit_membership_delta()
 
@@ -657,8 +500,7 @@ class TopNReadMv:
         if not ids:  # consumer attached without seeding — seed, no delta
             self.ensure_topk_feed()
             return
-        delta_probe = self._probe.last if self._probe is not None else None
-        if delta_probe is not None and self._delta_cant_cross(delta_probe, ids[-1]):
+        if self._delta is not None and self._delta_cant_cross(self._delta, ids[-1]):
             # threshold skip (top_n_cache.rs): the batch's whole output
             # delta orders strictly after the cached k-th row — top-k
             # membership provably unchanged, NO ordered state scan, no
@@ -777,13 +619,8 @@ class StreamUnionMv:
         spark: SparkSession,
         state_dir: str,
         out_cols: list[str],
-        setop: str | bool = "union_all",
+        setop: str = "union_all",
     ):
-        # bool kept for source compat with the round-5 UNION-only shape
-        if setop is True:
-            setop = "union"
-        elif setop is False:
-            setop = "union_all"
         if setop not in ("union_all", "union", "intersect", "except"):
             raise ValueError(f"unknown set operation {setop!r}")
         inner = ["__ubranch", "__urid"]
@@ -865,29 +702,6 @@ class StreamUnionMv:
         return self.rows.result().drop("__ubranch", "__urid")
 
 
-class _UnionBranchHandle:
-    """Per-arm subscription of a StreamUnionMv to its source table: DML
-    batches run through the arm's select-project-filter transform (op
-    column preserved) and fold into the union's row-grain MV under the
-    arm's own batch namespace (independent upstream id sequences)."""
-
-    def __init__(self, name: str, umv: StreamUnionMv, idx: int, transform):
-        self.name = name
-        self._umv = umv
-        self._idx = idx
-        self._transform = transform
-        self.view = self  # duck-type MaterializedViewHandle for _apply_dml
-
-    def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        ns = f"u{self._idx}" if batch_ns is None else f"u{self._idx}_{batch_ns}"
-        self._umv.rows.apply_batch(
-            self._transform(batch), batch_id=batch_id, batch_ns=ns
-        )
-
-    def _register(self) -> None:
-        pass
-
-
 def _non_strict(spark: SparkSession, recompute):
     """Streaming expression evaluation is NON-STRICT in the reference
     (`e2e_test/streaming/non_strict_mode.slt`; issue 4625 / PR 12461:
@@ -936,8 +750,8 @@ class Engine:
         # RHS moving re-evaluates rows in the reference too)
         self._scalar_deps: list[dict] = []
         # SQL-surface catalog objects (reference handler/create_view.rs,
-        # create_source.rs, create_sink.rs): views are late-bound SQL
-        # bodies re-registered after every DML; sources are connector
+        # create_source.rs, create_sink.rs): views are SQL bodies bound
+        # once as Spark SQL temp views (see _bind_view); sources are connector
         # descriptors (file ones batch-readable); sinks drain MV
         # changelogs after every DML batch.
         self.views: dict[str, str] = {}
@@ -982,19 +796,100 @@ class Engine:
         #: name → rows-per-slice cap; 0 parks the backfill until raised
         self._mv_rate_limits: dict[str, int] = {}
 
-    def _register_views(self) -> None:
+    def _bind_view(self, name: str, body: str) -> None:
+        """Register plain view `name` as a Spark SQL temp view. Such a
+        view resolves the relations it names at READ time, so it follows
+        every re-registered table/MV snapshot without a refresh, reads
+        as TABLE_OR_VIEW_NOT_FOUND once its base is dropped, and re-binds
+        when the base is re-created."""
         from risingwave_spark.functions.pgsql import pg_to_spark_sql
 
-        for name, body in self.views.items():
-            try:
-                self.spark.sql(pg_to_spark_sql(body)).createOrReplaceTempView(name)
-            except Exception:
-                # a view over a dropped relation must not poison every
-                # later DML batch's re-registration pass: unregister it
-                # (reads then raise TABLE_OR_VIEW_NOT_FOUND, not a stale
-                # snapshot) and let it re-bind if its base reappears
-                self.spark.catalog.dropTempView(name)
-                continue
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMPORARY VIEW `{name}` AS {pg_to_spark_sql(body)}"
+        )
+
+    # ---- propagation graph -------------------------------------------
+    def _producer(self, name: str):
+        """The table or MV view whose `downstream` edges leave `name`."""
+        return self.tables[name] if name in self.tables else self.mv_handles[name].view
+
+    def _subscribe(self, base: str, h: MaterializedViewHandle) -> None:
+        """Hook MV `h` onto table/MV `base`: base's batches fold into it.
+        `h.view` resolves per batch, so a TopN wrap installed after the
+        hook sees every batch."""
+        self._producer(base).downstream.append(
+            Edge(h.name, lambda b, i, ns: h.view.apply_batch(b, batch_id=i, batch_ns=ns))
+        )
+
+    def _edges(self, name: str) -> list:
+        """The edges leaving table/MV `name`; an MV kind that feeds
+        nothing (the EOWC over-window MV) has none."""
+        return getattr(self._producer(name), "downstream", [])
+
+    def _closure(self, names) -> list[str]:
+        """The MVs a batch from any of `names` (tables or MVs) can move:
+        edge owners, transitively — `names` themselves excluded."""
+        out: dict[str, None] = {}
+        todo = list(names)
+        while todo:
+            for e in self._edges(todo.pop()):
+                if e.owner not in out and e.owner in self.mv_handles:
+                    out[e.owner] = None
+                    todo.append(e.owner)
+        return [n for n in out if n not in names]
+
+    def _refresh(self, names) -> None:
+        """Re-register MVs `names` and every MV downstream of them — the
+        only catalog registrations a fold can move."""
+        for n in [*names, *self._closure(names)]:
+            self.mv_handles[n]._register()
+
+    def _unhook(self, names) -> None:
+        """Drop every edge owned by one of `names` from every producer."""
+        for n in [*self.tables, *self.mv_handles]:
+            edges = self._edges(n)
+            edges[:] = [e for e in edges if e.owner not in names]
+
+    def _remove_state(self, prefixes, name: str) -> None:
+        import shutil
+
+        for prefix in prefixes:
+            shutil.rmtree(os.path.join(self.warehouse, prefix + name), ignore_errors=True)
+
+    def _drop_mvs(self, names: list[str], unrecord: list[str] = (), cascade: bool = False) -> None:
+        """Forget MVs `names`: their catalog entries (with `unrecord`, in
+        one catalog write), their edges, registrations and on-disk state.
+        Sinks and subscriptions reading their changelogs go with them
+        under `cascade`; without it their presence refuses the drop.
+        State is removed only after the catalog no longer names it, so a
+        crash in between never leaves an entry pointing at deleted
+        state."""
+        dirs = tuple(
+            os.path.join(self.warehouse, p + n) + os.sep for n in names for p in MV_STATE_PREFIXES
+        )
+        # a sink (through its subscription) or subscription whose cursor
+        # lives in a dropped changelog would fail every later drain
+        readers = {
+            k: coll
+            for coll in (self.sinks, getattr(self, "subscriptions", {}))
+            for k, v in coll.items()
+            if getattr(v, "sub", v).dir.startswith(dirs)
+        }
+        if readers and not cascade:
+            raise ValueError(
+                f"sinks/subscriptions {sorted(readers)} read materialized "
+                f"view(s) {names}; drop them first or use CASCADE"
+            )
+        self._unrecord_ddl([*unrecord, *names, *readers])
+        for k, coll in readers.items():
+            coll.pop(k)
+        self._unhook(set(names))
+        for n in names:
+            self.mv_handles.pop(n, None)
+            self.temporal_mvs.pop(n, None)
+            self.spark.catalog.dropTempView(n)
+            self._remove_state(MV_STATE_PREFIXES, n)
+        self._scalar_deps[:] = [d for d in self._scalar_deps if d["mv"] not in names]
 
     # ---- durability ------------------------------------------------
     def _catalog_path(self) -> str:
@@ -1067,13 +962,25 @@ class Engine:
         ChunkedState, MVs their bucketed epochs and changelog; no
         backfill re-runs, no data is rewritten)."""
         eng = cls(spark, warehouse)
-        eng._replaying = True
-        try:
-            for entry in eng._read_catalog():
-                eng.sql(entry["stmt"])
-        finally:
-            eng._replaying = False
+        eng._replay()
         return eng
+
+    def _replay(self) -> None:
+        """Re-run the recorded DDL in catalog order. A view recorded
+        before a base that was dropped and re-created fails to bind
+        during the pass; it binds at the end, once every base exists."""
+        self._replaying = True
+        try:
+            for entry in self._read_catalog():
+                self.sql(entry["stmt"])
+        finally:
+            self._replaying = False
+        for name, body in self.views.items():
+            if not self.spark.catalog.tableExists(name):
+                try:
+                    self._bind_view(name, body)
+                except AnalysisException:
+                    pass  # base still gone: reads raise TABLE_OR_VIEW_NOT_FOUND
 
     def _rebuild_from_catalog(self) -> None:
         """Reset the in-memory catalog state and replay the recorded DDL
@@ -1102,12 +1009,7 @@ class Engine:
             ns = getattr(self, attr, None)
             if ns is not None:
                 ns.clear()
-        self._replaying = True
-        try:
-            for entry in self._read_catalog():
-                self.sql(entry["stmt"])
-        finally:
-            self._replaying = False
+        self._replay()
 
     # ---- DDL -------------------------------------------------------
     def create_table(self, name: str, rows: DataFrame, pk: str) -> Table:
@@ -1136,7 +1038,7 @@ class Engine:
         recompute = _non_strict(self.spark, recompute)
         if base in self.tables:
             t = self.tables[base]
-            row_id, backfill, subscribe = t.pk, t.snapshot(), t.mvs
+            row_id, backfill = t.pk, t.snapshot()
         else:
             up = self.mv_handles[base]
             if isinstance(up.view, TopNReadMv):
@@ -1162,11 +1064,8 @@ class Engine:
             # upstream group keys ARE the upstream rows' pk — composite
             # keys ride through as a composite row id (ChunkedState
             # tombstones match on all pk columns)
-            row_id, backfill, subscribe = (
-                up.view.keys[0] if len(up.view.keys) == 1 else list(up.view.keys),
-                up.view.result(),
-                None,
-            )
+            row_id = up.view.keys[0] if len(up.view.keys) == 1 else list(up.view.keys)
+            backfill = up.view.result()
         if hidden:
             cls = SimpleAggMv if seed is not None else ProjectedMaterializedView
             mv = cls(
@@ -1197,10 +1096,7 @@ class Engine:
             self._run_backfill(name, mv, backfill, row_id)
         h = MaterializedViewHandle(name, mv)
         h._register()
-        if subscribe is not None:
-            subscribe.append(h)
-        else:
-            self.mv_handles[base].view.downstream.append(mv)
+        self._subscribe(base, h)
         self.mv_handles[name] = h
         return h
 
@@ -1304,14 +1200,14 @@ class Engine:
         os.remove(prog)
 
     def _resolve_join_input(self, name: str):
-        """Resolve a stream-join input by name to (pk, snapshot, source):
-        an engine TABLE (source = the Table, DML feeds via `mvs`) or an
-        agg-keyed MV (source = the view object, changelog feeds via
-        `downstream`) — the MV-as-join-input path that desugared
-        subqueries / CTEs / MV-on-MV join bodies ride on."""
+        """Resolve a stream-join input by name to (pk, snapshot,
+        producer): an engine TABLE or an agg-keyed MV — the MV-as-join-
+        input path that desugared subqueries / CTEs / MV-on-MV join
+        bodies ride on. Either way the join hooks an edge onto the
+        producer's `downstream`."""
         if name in self.tables:
             t = self.tables[name]
-            return t.pk, t.snapshot(), ("table", t)
+            return t.pk, t.snapshot(), t
         if name not in self.mv_handles:
             raise ValueError(f"join input {name!r} is not a known table or MV")
         v = self.mv_handles[name].view
@@ -1339,85 +1235,7 @@ class Engine:
                 "row-grain join MVs cannot re-key a downstream join's state"
             )
         pk = keys[0] if len(keys) == 1 else list(keys)
-        return pk, v.result(), ("mv", v)
-
-    def create_stream_join_mv(
-        self,
-        name: str,
-        left: str,
-        right: str,
-        left_on: list[str],
-        right_on: list[str],
-        how: str = "inner",
-        cond: str | None = None,
-        keys: list[str] | None = None,
-        recompute=None,
-        project=None,
-        key_of=None,
-        left_pre: str | None = None,
-        right_pre: str | None = None,
-        left_ren: dict | None = None,
-        right_ren: dict | None = None,
-    ) -> MaterializedViewHandle:
-        """CREATE MATERIALIZED VIEW over a stream-stream join of two
-        inputs — engine TABLES or agg-keyed MVs (reference
-        `create_mv.rs:87` planning onto `stream_hash_join.rs` — both
-        inputs are changelogs; MV inputs are mv-on-mv composed with the
-        join plan): DML on either table — including deletes — and
-        upstream-MV changelog updates flow into the matching input of a
-        `RetractableStreamJoin`; `keys`+`recompute` hang a downstream
-        group-agg MV off the join's changelog (mv-on-mv.md), `project`
-        is a stateless read-time transform of the maintained join
-        result. Backfills from both inputs' current snapshots."""
-        if recompute is not None:
-            # join-chain folds evaluate non-strict like every other MV
-            # path (non_strict_mode.slt: a div/0 in a joined MV body
-            # pads NULL instead of failing the fold)
-            recompute = _non_strict(self.spark, recompute)
-        pk_l, snap_l, src_l = self._resolve_join_input(left)
-        pk_r, snap_r, src_r = self._resolve_join_input(right)
-        # self-join roles: rename BEFORE pre-filters (whose text already
-        # speaks the renamed names) and before state keys are derived
-        pk_l, snap_l = _ren_pk(pk_l, left_ren), _ren_batch(snap_l, left_ren)
-        pk_r, snap_r = _ren_pk(pk_r, right_ren), _ren_batch(snap_r, right_ren)
-        jmv = StreamJoinMv(
-            self.spark,
-            os.path.join(self.warehouse, f"jmv_{name}"),
-            left_on,
-            right_on,
-            pk_l,
-            pk_r,
-            how,
-            cond,
-            keys=keys,
-            recompute=recompute,
-            project=project,
-            key_of=key_of,
-        )
-        if left_pre:
-            snap_l = snap_l.filter(F.expr(left_pre))
-        if right_pre:
-            snap_r = snap_r.filter(F.expr(right_pre))
-        if not jmv.join.mv.exists():
-            # Backfill: both snapshots fold in ONE apply (each side's
-            # state must exist before the first affected-key recompute
-            # reads it). A re-opened MV re-attaches its state instead.
-            jmv.join.apply(
-                left=with_ops(snap_l, 1),
-                right=with_ops(snap_r, 1),
-            )
-        h = MaterializedViewHandle(name, jmv)
-        h._register()
-        for side, (kind, src), pre, ren in (
-            ("left", src_l, left_pre, left_ren),
-            ("right", src_r, right_pre, right_ren),
-        ):
-            if kind == "table":
-                src.mvs.append(_JoinSideHandle(name, jmv, side, pre=pre, ren=ren))
-            else:
-                src.downstream.append(_MvJoinFeed(jmv.join, side, pre=pre, ren=ren))
-        self.mv_handles[name] = h
-        return h
+        return pk, v.result(), v
 
     def create_stream_join_chain_mv(
         self,
@@ -1435,9 +1253,10 @@ class Engine:
         StreamJoinChainMv; MV inputs are the desugared form of
         subqueries / CTEs in the body — reference `apply_to_join_rule.rs`
         subquery unnesting composed with the multi-way join plan).
-        `steps[i]` = {left_on, right_on, how, cond} joining the running
-        result with `tbls[i+1]`. Backfills each level from current
-        snapshots, then wires the changelog cascade + per-input feeds."""
+        `steps[i]` = {left_on, right_on, how, cond, pre_l, pre_r}
+        joining the running result with `tbls[i+1]`; a 2-input join is a
+        one-step chain. Backfills each level from current snapshots,
+        then wires the changelog cascade + per-input feeds."""
         if recompute is not None:
             recompute = _non_strict(self.spark, recompute)  # non_strict_mode.slt
         resolved = [self._resolve_join_input(t) for t in tbls]
@@ -1457,8 +1276,10 @@ class Engine:
             key_of=key_of,
         )
         # Backfill LEVEL BY LEVEL (each level's snapshot feeds the next)
-        # BEFORE hooking the cascade — the hooks would double-feed the
-        # backfill chunks. A re-opened chain re-attaches instead.
+        # BEFORE hooking the cascade and the agg — the hooks would
+        # double-feed the backfill chunks. A re-opened chain re-attaches
+        # instead; a kept agg already holds every joined row even when a
+        # join level is rebuilt.
         pre_of = [steps[0].get("pre_l")] + [s.get("pre_r") for s in steps]
         for i, j in enumerate(chain.joins):
             if not j.mv.exists():
@@ -1472,20 +1293,17 @@ class Engine:
                     left=with_ops(left, 1),
                     right=with_ops(right, 1),
                 )
-        if chain.agg is not None and not chain.agg.mv.exists():
-            chain.agg.apply_batch(with_ops(chain.joins[-1].result(), 1))
-        for i in range(len(chain.joins) - 1):
-            chain.joins[i].downstream.append(_JoinChainFeed(chain.joins[i + 1]))
         if chain.agg is not None:
+            if not chain.agg.mv.exists():
+                chain.agg.apply_batch(with_ops(chain.joins[-1].result(), 1))
             chain.joins[-1].downstream.append(chain.agg)
+        for i in range(len(chain.joins) - 1):
+            chain.joins[i].downstream.append(_join_edge(name, chain.joins[i + 1], "left"))
         h = MaterializedViewHandle(name, chain)
         h._register()
-        for i, (_, _, (kind, src)) in enumerate(resolved):
+        for i, (_, _, src) in enumerate(resolved):
             join, side = (chain.joins[0], "left") if i == 0 else (chain.joins[i - 1], "right")
-            if kind == "table":
-                src.mvs.append(_ChainSideHandle(name, join, side, pre=pre_of[i], ren=renames[i]))
-            else:
-                src.downstream.append(_MvJoinFeed(join, side, pre=pre_of[i], ren=renames[i]))
+            src.downstream.append(_join_edge(name, join, side, pre=pre_of[i], ren=renames[i]))
         self.mv_handles[name] = h
         return h
 
@@ -1494,7 +1312,7 @@ class Engine:
         name: str,
         branches: list,
         out_cols: list[str],
-        setop: str | bool = "union_all",
+        setop: str = "union_all",
     ) -> MaterializedViewHandle:
         """CREATE MATERIALIZED VIEW over UNION [ALL] / INTERSECT /
         EXCEPT of single-table arms (see StreamUnionMv). `branches` =
@@ -1514,8 +1332,18 @@ class Engine:
                 )
         h = MaterializedViewHandle(name, umv)
         h._register()
+
+        def arm(i: int, transform) -> Edge:
+            # each arm folds through its select-project-filter under its
+            # own batch namespace (independent upstream id sequences)
+            def fold(batch: DataFrame, batch_id, batch_ns) -> None:
+                ns = f"u{i}" if batch_ns is None else f"u{i}_{batch_ns}"
+                umv.rows.apply_batch(transform(batch), batch_id=batch_id, batch_ns=ns)
+
+            return Edge(name, fold)
+
         for i, (tbl, transform) in enumerate(branches):
-            self.tables[tbl].mvs.append(_UnionBranchHandle(name, umv, i, transform))
+            self.tables[tbl].downstream.append(arm(i, transform))
         self.mv_handles[name] = h
         return h
 
@@ -1723,12 +1551,6 @@ class Engine:
             h = self.mv_handles.get(dep["mv"])
             if h is None:
                 continue
-            v = h.view
-            agg = getattr(v, "agg", None)
-            if agg is None and hasattr(v, "retouch"):
-                agg = v
-            if agg is None:
-                continue  # row-grain join MV: scalar evaluates at read
             if table is not None:
                 toks = dep.setdefault(
                     "refs", set(_re.findall(r"\b\w+\b", dep["sql"]))
@@ -1739,6 +1561,15 @@ class Engine:
                 reads_mv = any(t in self.mv_handles for t in toks)
                 if not reads_mv and table not in toks:
                     continue
+            v = h.view
+            agg = getattr(v, "agg", None)
+            if agg is None and hasattr(v, "retouch"):
+                agg = v
+            if agg is None:
+                # row-grain join MV: the scalar evaluates at read, inside
+                # the registered plan — re-register to re-resolve it
+                h._register()
+                continue
             try:
                 row = self.spark.sql(dep["sql"]).first()
             except Exception:
@@ -1778,7 +1609,7 @@ class Engine:
             annotate = agg.key_of or (lambda d: d)
             aff = annotate(src).select(*agg.keys).distinct()
             agg.retouch(aff)
-            h._register()
+            self._refresh([dep["mv"]])
 
     def _apply_dml_locked(self, table: str, batch: DataFrame) -> None:
         t = self.tables[table]
@@ -1788,15 +1619,14 @@ class Engine:
             commit_ts=self._now_epoch(),
         )
         t._register()
-        for h in t.mvs:
-            h.view.apply_batch(batch)
-        # propagation may have advanced downstream MVs too — refresh all
-        for h in self.mv_handles.values():
-            h._register()
+        for e in t.downstream:
+            e.apply_batch(batch)
+        # only MVs reachable from this table moved; plain views are SQL
+        # temp views and re-resolve at read
+        for n in self._closure([table]):
+            self.mv_handles[n]._register()
         self._check_scalar_deps(table)
-        # late-bound views re-resolve against the new snapshots; sinks
-        # drain whatever changelog chunks this batch produced
-        self._register_views()
+        # sinks drain whatever changelog chunks this batch produced
         for s in self.sinks.values():
             s.drain()
 
@@ -1864,10 +1694,9 @@ class Engine:
                 if not affected.isEmpty():
                     mv.retouch(affected)
             self._write_now_tick(name, cur)
-        if self.temporal_mvs:
-            for h in self.mv_handles.values():
-                h._register()
-            self._register_views()
+        live = [n for n in self.temporal_mvs if n in self.mv_handles]
+        if live:
+            self._refresh(live)
             for s in self.sinks.values():
                 s.drain()
 

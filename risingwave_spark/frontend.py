@@ -16,11 +16,12 @@ MV maintenance contract (see `streaming/mv.py`, `streaming/join.py`): a
 compiles by FROM shape:
 
 - single table → `MaterializedView` (recompute over affected groups);
-- N engine tables joined (disjoint column names) → a TRUE stream-stream
-  join MV: 2 tables onto `RetractableStreamJoin`, 3+ onto a left-deep
-  `StreamJoinChainMv` cascade (reference multi-way delta join,
-  `create_mv.rs:87` → `stream_hash_join.rs` tree) — deletes on ANY side
-  retract; optional GROUP BY = downstream agg MV on the changelog;
+- N engine tables or keyed MVs joined (disjoint column names) → a TRUE
+  stream-stream join MV: a left-deep `StreamJoinChainMv` cascade of
+  `RetractableStreamJoin` steps, one step per JOIN (reference multi-way
+  delta join, `create_mv.rs:87` → `stream_hash_join.rs` tree) — deletes
+  on ANY side retract; optional GROUP BY = downstream agg MV on the
+  changelog;
 - join with a non-engine relation (or shared column names) → dimension
   path: maintained w.r.t. the FIRST table, dimensions read fresh per
   recompute (TemporalJoin "current version" semantics).
@@ -42,9 +43,11 @@ import os
 import re
 from typing import TYPE_CHECKING
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from risingwave_spark.api import MV_STATE_PREFIXES
 from risingwave_spark.functions.pgsql import (
     _map_type,
     _mask_strings,
@@ -2716,10 +2719,9 @@ def _rename_with_dependents(engine: "Engine", old: str, new: str, kind: str) -> 
     with open(tmp, "w") as f:
         _json.dump(entries, f, indent=1)
     os.replace(tmp, engine._catalog_path())
-    mv_prefixes = ("mv_", "jmv_", "umv_", "topn_", "owmv_", "eowcow_")
-    prefixes = ("t_",) if kind == "TABLE" else mv_prefixes
+    prefixes = ("t_",) if kind == "TABLE" else MV_STATE_PREFIXES
     moves = [(old, new, prefixes)] + [
-        (hn, f"__{new}_sq" + hn[len(f"__{old}_sq"):], mv_prefixes)
+        (hn, f"__{new}_sq" + hn[len(f"__{old}_sq"):], MV_STATE_PREFIXES)
         for hn in helper_olds
     ]
     for o, n, pfxs in moves:
@@ -2772,8 +2774,7 @@ def _handle_alter_rename(engine: "Engine", ast: dict) -> DataFrame:
     if kind == "TABLE":
         if old not in engine.tables:
             raise ValueError(f"ALTER TABLE target {old!r} is not a table")
-        t = engine.tables[old]
-        if t.mvs:
+        if engine._closure([old]):
             # dependents exist → the reference's definition-rewrite path
             return _rename_with_dependents(engine, old, new, "TABLE")
         stmts = rewrite_catalog(
@@ -2796,11 +2797,9 @@ def _handle_alter_rename(engine: "Engine", ast: dict) -> DataFrame:
     if kind == "MATERIALIZED VIEW":
         if old not in engine.mv_handles:
             raise ValueError(f"ALTER MATERIALIZED VIEW target {old!r} is not an MV")
-        h = engine.mv_handles[old]
-        v = h.view
         if (
-            bool(getattr(v, "downstream", []))
-            or getattr(v, "emit_changelog", False)
+            engine._closure([old])
+            or getattr(engine.mv_handles[old].view, "emit_changelog", False)
             or any(n.startswith(f"__{old}_sq") for n in engine.mv_handles)
         ):
             # downstream MVs / sinks / subscriptions reference it — or
@@ -2817,15 +2816,11 @@ def _handle_alter_rename(engine: "Engine", ast: dict) -> DataFrame:
                 "rename is only supported for recorded DDL"
             )
         del engine.mv_handles[old]
-        for t in engine.tables.values():
-            t.mvs[:] = [x for x in t.mvs if x is not h and x.name != old]
-        for other in engine.mv_handles.values():
-            if v in getattr(other.view, "downstream", []):
-                other.view.downstream.remove(v)
+        engine._unhook({old})
         if old in engine.temporal_mvs:
             engine.temporal_mvs[new] = engine.temporal_mvs.pop(old)
         spark.catalog.dropTempView(old)
-        for prefix in ("mv_", "jmv_", "umv_", "topn_", "owmv_", "eowcow_"):
+        for prefix in MV_STATE_PREFIXES:
             src_dir = os.path.join(engine.warehouse, prefix + old)
             if os.path.isdir(src_dir):
                 os.rename(src_dir, os.path.join(engine.warehouse, prefix + new))
@@ -2839,10 +2834,12 @@ def _handle_alter_rename(engine: "Engine", ast: dict) -> DataFrame:
     if kind == "VIEW":
         if old not in engine.views:
             raise ValueError(f"ALTER VIEW target {old!r} is not a view")
+        # bind first: a body that no longer resolves fails the ALTER
+        # before the catalog changes
+        engine._bind_view(new, engine.views[old])
         rewrite_catalog(rf"^(\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?){old}\b")
         engine.views[new] = engine.views.pop(old)
         spark.catalog.dropTempView(old)
-        engine._register_views()
         return _status(spark, "ALTER_VIEW")
     if kind == "SOURCE":
         if old not in engine.sources:
@@ -3169,7 +3166,7 @@ def _handle_alter_table(engine: "Engine", ast: dict) -> DataFrame:
             "Adding/dropping a column of a table with webhook has not "
             "been implemented."
         )
-    if t.mvs:
+    if engine._closure([name]):
         raise ValueError(
             f"cannot ALTER table {name!r}: it has dependent materialized "
             "views (drop them first — the reference enforces the same)"
@@ -3278,46 +3275,38 @@ def _handle_drop(engine: "Engine", ast: dict) -> DataFrame:
         if name not in engine.tables:
             return _status(spark, "DROP_TABLE")  # IF EXISTS semantics
         engine.webhooks.pop(name, None)
-        t = engine.tables[name]
-        if t.mvs and not cascade:
+        deps = engine._closure([name])
+        if deps and not cascade:
             raise ValueError(
                 f"table {name!r} has dependent materialized views "
-                f"{[h.name for h in t.mvs]}; use DROP TABLE ... CASCADE"
+                f"{deps}; use DROP TABLE ... CASCADE"
             )
         alters = [
             e["name"]
             for e in engine._read_catalog()
             if e["name"].startswith(f"{name}#alter#")
         ]
-        engine._unrecord_ddl([name] + [h.name for h in t.mvs] + alters)
-        dep_names = {h.name for h in t.mvs}
-        for h in list(t.mvs):
-            engine.mv_handles.pop(h.name, None)
-            engine.temporal_mvs.pop(h.name, None)
-            spark.catalog.dropTempView(h.name)
-        # a stream-join MV also subscribes to its OTHER input table —
-        # unhook those side handles so later DML there stops feeding it
-        for other in engine.tables.values():
-            other.mvs[:] = [x for x in other.mvs if x.name not in dep_names]
+        # CASCADE takes every MV the table's batches reach, not only the
+        # direct ones
+        engine._drop_mvs(deps, unrecord=[name] + alters, cascade=cascade)
         del engine.tables[name]
         spark.catalog.dropTempView(name)
+        engine._remove_state(("t_",), name)
         return _status(spark, "DROP_TABLE")
     if name not in engine.mv_handles:
         return _status(spark, "DROP_MATERIALIZED_VIEW")
-    engine._unrecord_ddl([name])
-    h = engine.mv_handles.pop(name)
-    engine.temporal_mvs.pop(name, None)
-    engine._scalar_deps[:] = [d for d in engine._scalar_deps if d["mv"] != name]
-    for t in engine.tables.values():
-        # match by name too: a stream-join MV subscribes via per-side
-        # handles (api._JoinSideHandle), not the catalog handle itself
-        t.mvs[:] = [x for x in t.mvs if x is not h and x.name != name]
-    for other in engine.mv_handles.values():
-        if h.view in other.view.downstream:
-            other.view.downstream.remove(h.view)
-    spark.catalog.dropTempView(name)
-    # desugared WHERE-subquery helpers belong to this MV — drop them too
-    for helper in [n for n in list(engine.mv_handles) if n.startswith(f"__{name}_sq")]:
+    deps = engine._closure([name])
+    if deps and not cascade:
+        raise ValueError(
+            f"materialized view {name!r} has dependent materialized views "
+            f"{deps}; use DROP MATERIALIZED VIEW ... CASCADE"
+        )
+    dropped = [name, *deps]
+    engine._drop_mvs(dropped, cascade=cascade)
+    # desugared WHERE-subquery helpers belong to their MV — drop them too
+    for helper in [
+        n for n in list(engine.mv_handles) if any(n.startswith(f"__{d}_sq") for d in dropped)
+    ]:
         _execute_one(engine, f"DROP MATERIALIZED VIEW {helper}")
     return _status(spark, "DROP_MATERIALIZED_VIEW")
 
@@ -4040,14 +4029,14 @@ def _parse_join_tree(masked: str):
 def _handle_create_stream_join_mv(
     engine: "Engine", name: str, stmt: str, pj: dict, lits: list[str]
 ) -> DataFrame:
-    """CREATE MV over a stream-stream join of N engine tables
-    (reference `create_mv.rs:87` planning a tree of
+    """CREATE MV over a stream-stream join of N engine tables or keyed
+    MVs (reference `create_mv.rs:87` planning a tree of
     `stream_hash_join.rs` nodes — every `e2e_test/streaming/tpch/` MV
-    has this shape): 2 tables compile onto `Engine.create_stream_join_mv`
-    → `RetractableStreamJoin`; 3+ onto `create_stream_join_chain_mv`
-    (left-deep cascade, each level's changelog feeding the next), with
-    an optional GROUP BY as a downstream agg MV. DML — including
-    DELETEs — on ANY table keeps the MV exact."""
+    has this shape): compiles onto `Engine.create_stream_join_chain_mv`
+    (left-deep cascade of `RetractableStreamJoin` steps, each level's
+    changelog feeding the next; 2 inputs are a one-step chain), with an
+    optional GROUP BY as a downstream agg MV. DML — including DELETEs —
+    on ANY input keeps the MV exact."""
     spark = engine.spark
     tables, aliases = pj["tables"], pj["aliases"]
     colsets = [_chain_input_cols(engine, t) for t in tables]
@@ -4274,20 +4263,10 @@ def _handle_create_stream_join_mv(
                 keep = [c for c in rows.columns if c not in derived]
                 return rows.select(*keep).selectExpr("*", *exprs)
 
-        if len(tables) == 2:
-            engine.create_stream_join_mv(
-                name, tables[0], tables[1],
-                steps[0]["left_on"], steps[0]["right_on"],
-                how=steps[0]["how"], cond=steps[0]["cond"],
-                keys=keys, recompute=recompute, key_of=key_of,
-                left_pre=steps[0]["pre_l"], right_pre=steps[0]["pre_r"],
-                left_ren=renames[0], right_ren=renames[1],
-            )
-        else:
-            engine.create_stream_join_chain_mv(
-                name, tables, steps, keys=keys, recompute=recompute,
-                key_of=key_of, renames=renames,
-            )
+        engine.create_stream_join_chain_mv(
+            name, tables, steps, keys=keys, recompute=recompute,
+            key_of=key_of, renames=renames,
+        )
     else:
         project = None
         sel_is_star = sel_txt.strip() == "*"
@@ -4298,18 +4277,9 @@ def _handle_create_stream_join_mv(
                 df.createOrReplaceTempView(tmp)
                 return spark.sql(body)
 
-        if len(tables) == 2:
-            engine.create_stream_join_mv(
-                name, tables[0], tables[1],
-                steps[0]["left_on"], steps[0]["right_on"],
-                how=steps[0]["how"], cond=steps[0]["cond"], project=project,
-                left_pre=steps[0]["pre_l"], right_pre=steps[0]["pre_r"],
-                left_ren=renames[0], right_ren=renames[1],
-            )
-        else:
-            engine.create_stream_join_chain_mv(
-                name, tables, steps, project=project, renames=renames
-            )
+        engine.create_stream_join_chain_mv(
+            name, tables, steps, project=project, renames=renames
+        )
     engine._record_ddl(name, stmt)
     return _status(spark, "CREATE_MATERIALIZED_VIEW")
 
@@ -4635,7 +4605,7 @@ def _handle_create_eowc_mv(
         snap = t.snapshot()
         mv.feed(snap)
     h._register()
-    t.mvs.append(h)
+    engine._subscribe(base, h)
     engine.mv_handles[name] = h
     engine._record_ddl(name, stmt)
     return _status(engine.spark, "CREATE_MATERIALIZED_VIEW")
@@ -4939,10 +4909,7 @@ def _handle_create_over_window_mv(
         view.apply_batch(with_ops(base_snap, 1))
     h = MaterializedViewHandle(name, view)
     h._register()
-    if t is not None:
-        t.mvs.append(h)
-    else:
-        engine.mv_handles[base].view.downstream.append(mvd)
+    engine._subscribe(base, h)
     engine.mv_handles[name] = h
     engine._record_ddl(name, stmt)
     return _status(engine.spark, "CREATE_MATERIALIZED_VIEW")
@@ -5425,7 +5392,7 @@ def _handle_create_topn_mv(
         mv.apply_batch(_wo(t.snapshot(), 1))
     h = MaterializedViewHandle(name, mv)
     h._register()
-    t.mvs.append(h)
+    engine._subscribe(t.name, h)
     engine.mv_handles[name] = h
     engine._record_ddl(name, stmt)
     return _status(engine.spark, "CREATE_MATERIALIZED_VIEW")
@@ -6043,12 +6010,18 @@ def _merge_connection_options(engine: "Engine", opts: dict) -> dict:
 
 def _handle_create_view(engine: "Engine", ast: dict) -> DataFrame:
     """CREATE VIEW (reference `handler/create_view.rs`): a named SQL body,
-    LATE-BOUND — re-registered against the current table snapshots after
-    every DML batch (Spark temp views freeze their plan at creation, so
-    the engine re-runs the registration instead)."""
+    LATE-BOUND — registered once as a Spark SQL temp view, which resolves
+    the tables and MVs it names at read time (Engine._bind_view), so no
+    DML ever refreshes it."""
     name, body = ast["name"], ast["body"].strip().rstrip(";")
+    try:
+        engine._bind_view(name, body)
+    except AnalysisException:
+        # replay runs in catalog order: a base re-created after this
+        # view does not exist yet — Engine._replay binds it at the end
+        if not engine._replaying:
+            raise
     engine.views[name] = body
-    engine._register_views()
     engine._record_ddl(name, ast["stmt"])
     return _status(engine.spark, "CREATE_VIEW")
 
@@ -10622,7 +10595,6 @@ def _txn_end(engine: "Engine") -> DataFrame:
             t._register()
         for h in engine.mv_handles.values():
             h._register()
-        engine._register_views()
     return _status(engine.spark, "COMMIT")
 
 
@@ -11032,7 +11004,6 @@ def _execute_tail(engine: "Engine", stmt: str) -> DataFrame:
             t._register()
         for h in engine.mv_handles.values():
             h._register()
-        engine._register_views()
         return _status(engine.spark, "RECOVER")
     m = re.match(
         r"^\s*ALTER\s+SYSTEM\s+SET\s+([\w.]+)\s*(?:=|\s+TO)\s+(.+?)\s*;?\s*$",

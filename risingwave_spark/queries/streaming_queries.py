@@ -361,16 +361,18 @@ def stream_over_window(spark, sf_dir):
 
     # window Columns built once per WindowSpec, not per fold (r13 §B:
     # Column construction is py4j round trips; the spec is cached by
-    # MaterializedOverWindow._recompute so this memo hits every fold)
+    # MaterializedOverWindow._recompute so this memo hits every fold).
+    # Keyed by the spec itself (identity hash): the memo holds it alive,
+    # so a recycled id() can never hand back another spec's columns.
     cols_by_spec: dict = {}
 
     def project(rows, w):
-        if id(w) not in cols_by_spec:
-            cols_by_spec[id(w)] = [
+        if w not in cols_by_spec:
+            cols_by_spec[w] = [
                 F.row_number().over(w).alias("rn"),
                 F.lag("value").over(w).alias("prev_value"),
             ]
-        return rows.select("user_id", "event_id", "value", *cols_by_spec[id(w)])
+        return rows.select("user_id", "event_id", "value", *cols_by_spec[w])
 
     mvw = MaterializedOverWindow(
         spark,

@@ -129,7 +129,8 @@ def _keyset_cap(env: str, default: int) -> int:
     / SPARK_GRAFT_KEYSET_MAX_DISTINCT): the caps decide when a fold takes
     the driver-side literal path vs the broadcast-join path, so a cluster
     deployment can tune them to its driver budget — and setting either to
-    0 forces the join path everywhere, which is how the scale path is
+    0 forces the join path for every non-empty fold (an empty fold still
+    returns its empty key set), which is how the scale path is
     exercised at bench scale (plans/r13 fallback capture + test)."""
     try:
         return int(os.environ[env])

@@ -376,7 +376,7 @@ def test_stream_join_mv_restart_and_drop(spark, tmp_path):
     # drop unhooks BOTH side subscriptions
     eng2.sql("DROP MATERIALIZED VIEW rj_mv")
     assert "rj_mv" not in eng2.mv_handles
-    assert all(not t.mvs for t in eng2.tables.values())
+    assert all(not t.downstream for t in eng2.tables.values())
     eng2.sql("INSERT INTO rj_a VALUES (9,9)")  # must not feed a dropped MV
 
 
@@ -521,7 +521,7 @@ def test_create_mv_three_way_stream_join(eng):
     eng.sql("INSERT INTO w3_c VALUES (1004,103,42)")
     assert _rows(eng.sql("SELECT ak, total FROM w3_mv")) == [(1, 7), (2, 9), (3, 42)]
     eng.sql("DROP MATERIALIZED VIEW w3_mv")
-    assert all(not t.mvs for t in eng.tables.values())
+    assert all(not t.downstream for t in eng.tables.values())
 
 
 def test_sink_from_stream_join_mv(eng, tmp_path, spark):
@@ -604,6 +604,179 @@ def test_view_over_dropped_table_does_not_poison_dml(eng):
     # the broken view reads as not-found, not as a stale snapshot
     with pytest.raises(Exception, match="(?i)cannot be found|not found"):
         eng.sql("SELECT * FROM vp_v").collect()
+    # re-creating the base re-binds the view, live and after a reopen —
+    # whose replay meets the view BEFORE the re-created base
+    eng.sql("CREATE TABLE vp_a (k int4 PRIMARY KEY, v int4)")
+    eng.sql("INSERT INTO vp_a VALUES (2, 20)")
+    assert _rows(eng.sql("SELECT k, v FROM vp_v")) == [(2, 20)]
+    for n in ("vp_a", "vp_b", "vp_v"):  # a new process has no temp views
+        eng.spark.catalog.dropTempView(n)
+    eng2 = Engine.open(eng.spark, eng.warehouse)
+    assert _rows(eng2.sql("SELECT k, v FROM vp_v")) == [(2, 20)]
+
+
+def test_drop_table_removes_its_state(eng):
+    """A re-created table starts empty: DROP removed the dropped table's
+    state directory instead of letting the new one re-attach it."""
+    eng.sql("CREATE TABLE ev (id int8 PRIMARY KEY, v int8)")
+    eng.sql("INSERT INTO ev VALUES (1, 10), (2, 20)")
+    eng.sql("DROP TABLE ev")
+    eng.sql("CREATE TABLE ev (id int8 PRIMARY KEY, v int8)")
+    assert _rows(eng.sql("SELECT id, v FROM ev")) == []
+
+
+def test_drop_mv_removes_its_state(eng):
+    """A re-created MV backfills from the base's current rows instead of
+    re-attaching the dropped MV's materialization."""
+    eng.sql("CREATE TABLE mt (id int8 PRIMARY KEY, g int8, v int8)")
+    eng.sql("INSERT INTO mt VALUES (1, 1, 10)")
+    eng.sql("CREATE MATERIALIZED VIEW mu AS SELECT g, sum(v) AS s FROM mt GROUP BY g")
+    eng.sql("DROP MATERIALIZED VIEW mu")
+    eng.sql("INSERT INTO mt VALUES (2, 1, 5), (3, 2, 7)")
+    eng.sql("CREATE MATERIALIZED VIEW mu AS SELECT g, sum(v) AS s FROM mt GROUP BY g")
+    assert _rows(eng.sql("SELECT g, s FROM mu")) == [(1, 15), (2, 7)]
+
+
+def test_drop_mv_with_sinks_and_subscriptions_needs_cascade(eng, tmp_path):
+    """DROP refuses an MV whose changelog a sink or subscription reads;
+    under CASCADE they go with the MV's state, so later DML drains no
+    cursor from a deleted directory."""
+    eng.sql("CREATE TABLE st (id int8 PRIMARY KEY, v int8)")
+    eng.sql("CREATE MATERIALIZED VIEW smv AS SELECT v, count(*) AS n FROM st GROUP BY v")
+    eng.sql(f"CREATE SINK ssnk FROM smv WITH (connector='posix_fs', path='{tmp_path / 'out'}')")
+    eng.sql("CREATE SUBSCRIPTION ssub FROM smv")
+    with pytest.raises(ValueError, match="CASCADE"):
+        eng.sql("DROP MATERIALIZED VIEW smv")
+    assert "smv" in eng.mv_handles and "ssnk" in eng.sinks and "ssub" in eng.subscriptions
+    assert {"smv", "ssnk", "ssub"} <= {e["name"] for e in eng._read_catalog()}
+    eng.sql("DROP MATERIALIZED VIEW smv CASCADE")
+    assert "ssnk" not in eng.sinks and "ssub" not in eng.subscriptions
+    assert not {"smv", "ssnk", "ssub"} & {e["name"] for e in eng._read_catalog()}
+    eng.sql("INSERT INTO st VALUES (1, 1)")
+    assert _rows(eng.sql("SELECT id, v FROM st")) == [(1, 1)]
+
+
+def test_drop_mv_with_dependent_mvs_needs_cascade(eng):
+    """DROP refuses an MV that other MVs read; CASCADE drops them all,
+    state included, and the warehouse still reopens."""
+    import os as _os
+
+    eng.sql("CREATE TABLE dt (id int8 PRIMARY KEY, g int8, v int8)")
+    eng.sql("INSERT INTO dt VALUES (1, 1, 10), (2, 2, 20)")
+    eng.sql("CREATE MATERIALIZED VIEW dbase AS SELECT g, sum(v) AS s FROM dt GROUP BY g")
+    eng.sql("CREATE MATERIALIZED VIEW ddep AS SELECT s, count(*) AS n FROM dbase GROUP BY s")
+    with pytest.raises(ValueError, match="CASCADE"):
+        eng.sql("DROP MATERIALIZED VIEW dbase")
+    eng.sql("INSERT INTO dt VALUES (3, 1, 5)")
+    assert _rows(eng.sql("SELECT s, n FROM ddep")) == [(15, 1), (20, 1)]
+    eng.sql("DROP MATERIALIZED VIEW dbase CASCADE")
+    gone = {"dbase", "ddep"}
+    assert not gone & set(eng.mv_handles)
+    assert not gone & {e["name"] for e in eng._read_catalog()}
+    assert not [d for d in _os.listdir(eng.warehouse) if d.split("_", 1)[-1] in gone]
+    eng.sql("INSERT INTO dt VALUES (4, 2, 1)")
+    eng2 = Engine.open(eng.spark, eng.warehouse)
+    assert _rows(eng2.sql("SELECT id, v FROM dt")) == [(1, 10), (2, 20), (3, 5), (4, 1)]
+
+
+def test_reopen_join_mv_written_with_older_join_layout(spark, tmp_path):
+    """A 2-input join MV whose join state an older build kept at
+    `jmv_<name>/join` reopens with that level rebuilt from the inputs'
+    snapshots and its aggregate kept: no joined row is counted twice."""
+    import os as _os
+
+    wh = str(tmp_path / "wh_oldjoin")
+    eng = Engine(spark, wh)
+    eng.sql("CREATE TABLE oa (ak int8 PRIMARY KEY, av int8)")
+    eng.sql("CREATE TABLE ob (bid int8 PRIMARY KEY, bk int8, bv int8)")
+    eng.sql("INSERT INTO oa VALUES (1, 1), (2, 2)")
+    eng.sql("INSERT INTO ob VALUES (10, 1, 5), (11, 2, 7), (12, 1, 3)")
+    eng.sql(
+        "CREATE MATERIALIZED VIEW ojm AS SELECT a.ak, sum(b.bv) AS total, "
+        "count(*) AS n FROM oa a JOIN ob b ON a.ak = b.bk GROUP BY a.ak"
+    )
+    want = [(1, 8, 2), (2, 7, 1)]
+    assert _rows(eng.sql("SELECT ak, total, n FROM ojm")) == want
+    jdir = _os.path.join(wh, "jmv_ojm")
+    _os.rename(_os.path.join(jdir, "s0"), _os.path.join(jdir, "join"))
+    for n in ("oa", "ob", "ojm"):  # a new process has no temp views
+        spark.catalog.dropTempView(n)
+    eng2 = Engine.open(spark, wh)
+    assert _rows(eng2.sql("SELECT ak, total, n FROM ojm")) == want
+    eng2.sql("INSERT INTO ob VALUES (13, 2, 1)")
+    eng2.sql("DELETE FROM oa WHERE ak = 1")
+    assert _rows(eng2.sql("SELECT ak, total, n FROM ojm")) == [(2, 8, 2)]
+
+
+def test_dropped_wrapped_mv_on_mv_gets_no_batches(eng):
+    """DROP unhooks a TopN MV over an MV and an over-window MV over an MV
+    by owner name — both sit behind a wrapper of the view their upstream
+    feeds — so later DML folds into neither; re-creating them gives the
+    rows a shadow computation expects."""
+    eng.sql("CREATE TABLE wb (id int8 PRIMARY KEY, k int8, g int8, v int8)")
+    eng.sql("INSERT INTO wb VALUES (1, 1, 0, 10), (2, 2, 0, 20), (3, 3, 1, 5)")
+    eng.sql(
+        "CREATE MATERIALIZED VIEW wagg AS SELECT k, max(g) AS g, sum(v) AS total "
+        "FROM wb GROUP BY k"
+    )
+    top = "SELECT k, total FROM wagg ORDER BY total DESC, k LIMIT 2"
+    ow = (
+        "SELECT k, g, total, row_number() OVER (PARTITION BY g ORDER BY total) "
+        "AS rn FROM wagg"
+    )
+    eng.sql(f"CREATE MATERIALIZED VIEW topu AS {top}")
+    eng.sql(f"CREATE MATERIALIZED VIEW owu AS {ow}")
+    calls = []
+    for name in ("topu", "owu"):
+        v = eng.mv_handles[name].view
+        inner = v._inner if name == "topu" else v._i  # the wrapped view
+        orig = inner.apply_batch
+        object.__setattr__(
+            inner, "apply_batch", lambda *a, _o=orig, _n=name, **k: (calls.append(_n), _o(*a, **k))
+        )
+    eng.sql("DROP MATERIALIZED VIEW topu")
+    eng.sql("DROP MATERIALIZED VIEW owu")
+    eng.sql("INSERT INTO wb VALUES (4, 4, 1, 30)")
+    eng.sql("UPDATE wb SET v = 1 WHERE id = 2")
+    assert calls == []
+    eng.sql(f"CREATE MATERIALIZED VIEW topu AS {top}")
+    eng.sql(f"CREATE MATERIALIZED VIEW owu AS {ow}")
+    totals = {1: (0, 10), 2: (0, 1), 3: (1, 5), 4: (1, 30)}  # k -> (g, total)
+    assert _rows(eng.sql("SELECT k, total FROM topu")) == [(1, 10), (4, 30)]
+    want = []
+    for g in (0, 1):
+        part = sorted((t, k) for k, (gg, t) in totals.items() if gg == g)
+        want += [(k, g, t, rn) for rn, (t, k) in enumerate(part, 1)]
+    assert _rows(eng.sql("SELECT k, g, total, rn FROM owu")) == sorted(want)
+
+
+def test_mv_over_topn_over_mv_follows_membership(eng):
+    """The upstream MV's edge folds through the TopN wrapper, so a
+    consumer of a TopN-over-MV sees the top-k membership deltas."""
+    eng.sql("CREATE TABLE tt (id int8 PRIMARY KEY, k int8, v int8)")
+    eng.sql("INSERT INTO tt VALUES (1, 1, 10), (2, 2, 20), (3, 3, 30)")
+    eng.sql("CREATE MATERIALIZED VIEW tagg AS SELECT k, sum(v) AS total FROM tt GROUP BY k")
+    eng.sql("CREATE MATERIALIZED VIEW ttop AS SELECT k, total FROM tagg ORDER BY total DESC LIMIT 2")
+    eng.sql("CREATE MATERIALIZED VIEW tover AS SELECT k, max(total) AS m FROM ttop GROUP BY k")
+    eng.sql("INSERT INTO tt VALUES (4, 4, 99)")
+    assert _rows(eng.sql("SELECT k, m FROM tover")) == [(3, 30), (4, 99)]
+
+
+def test_dml_refreshes_only_reachable_mvs(eng):
+    """A DML batch re-registers only the MVs its table reaches: an MV
+    over table A is not re-registered by an INSERT into table B."""
+    eng.sql("CREATE TABLE ra1 (id int8 PRIMARY KEY, v int8)")
+    eng.sql("CREATE TABLE rb1 (id int8 PRIMARY KEY, v int8)")
+    eng.sql("CREATE MATERIALIZED VIEW ma1 AS SELECT v, count(*) AS n FROM ra1 GROUP BY v")
+    eng.sql("CREATE MATERIALIZED VIEW mb1 AS SELECT v, count(*) AS n FROM rb1 GROUP BY v")
+    registered = []
+    for name in ("ma1", "mb1"):
+        h = eng.mv_handles[name]
+        h._register = lambda _o=h._register, _n=name: (registered.append(_n), _o())
+    eng.sql("INSERT INTO rb1 VALUES (1, 1)")
+    assert registered == ["mb1"]
+    eng.sql("INSERT INTO ra1 VALUES (1, 1)")
+    assert registered == ["mb1", "ma1"]
 
 
 def test_sink_after_existing_subscription_does_not_double_count(eng, tmp_path, spark):
@@ -1399,7 +1572,7 @@ def test_union_mv_restart_and_drop(spark, tmp_path):
     eng2.sql("INSERT INTO rb VALUES (3, 30)")
     assert _rows(eng2.sql("SELECT k, val FROM rmv")) == [(2, 20), (3, 30)]
     eng2.sql("DROP MATERIALIZED VIEW rmv")
-    assert all(not t.mvs for t in eng2.tables.values())
+    assert all(not t.downstream for t in eng2.tables.values())
     eng2.sql("INSERT INTO ra VALUES (9, 90)")  # no dangling arm handle
 
 
@@ -1771,7 +1944,7 @@ def test_create_sink_as_query(spark, tmp_path):
     eng2.sql("DROP SINK sq")
     assert "__sinkq_sq" not in eng2.mv_handles
     assert all(
-        all(h.name != "__sinkq_sq" for h in t.mvs) for t in eng2.tables.values()
+        all(e.owner != "__sinkq_sq" for e in t.downstream) for t in eng2.tables.values()
     )
 
 
@@ -3631,9 +3804,9 @@ def test_non_strict_eval_in_join_chain_folds(eng, spark):
         "SELECT a.ka AS ka, sum(b.v / a.d) AS s "
         "FROM nja a JOIN njb b ON a.ka = b.kb GROUP BY a.ka"
     )
-    from risingwave_spark.api import StreamJoinMv
+    from risingwave_spark.api import StreamJoinChainMv
 
-    assert isinstance(eng.mv_handles["njm"].view, StreamJoinMv)
+    assert isinstance(eng.mv_handles["njm"].view, StreamJoinChainMv)
     # d = 0 poisons the division for k=1; the fold must not fail and
     # sum over an all-NULL group is NULL (PG/reference aggregation)
     eng.sql("INSERT INTO nja VALUES (1, 0), (2, 4)")

@@ -609,31 +609,33 @@ def test_join_sides_with_independent_batch_id_sequences(spark):
     stream's high ids must not make the other stream's folds skip."""
     import tempfile
 
-    from risingwave_spark.api import StreamJoinMv
+    from risingwave_spark.api import StreamJoinChainMv
     from risingwave_spark.streaming.mv import with_ops
 
     def recompute(rows):
         return rows.groupBy("k").agg(F.sum("rv").alias("total"))
 
     with tempfile.TemporaryDirectory() as d:
-        jmv = StreamJoinMv(
-            spark, d, ["k"], ["k2"], "lid", "rid", "inner", None,
-            keys=["k"], recompute=recompute,
+        jmv = StreamJoinChainMv(
+            spark, d, [{"left_on": ["k"], "right_on": ["k2"], "how": "inner"}],
+            ["lid", "rid"], keys=["k"], recompute=recompute,
         )
+        join = jmv.joins[0]
+        join.downstream.append(jmv.agg)  # the engine wires the agg after backfill
         L0 = spark.createDataFrame([(1, 1)], "lid int, k int")
         L1 = spark.createDataFrame([(2, 2)], "lid int, k int")
         R0 = spark.createDataFrame([(10, 1, 5)], "rid int, k2 int, rv int")
         R1 = spark.createDataFrame([(11, 2, 7)], "rid int, k2 int, rv int")
         # backfill both sides (the create-time bootstrap, no batch id)
-        jmv.join.apply(left=with_ops(L0, 1), right=with_ops(R0, 1))
+        join.apply(left=with_ops(L0, 1), right=with_ops(R0, 1))
         # left stream is far ahead in its own id sequence
-        jmv.apply_left(with_ops(L1, 1), batch_id=100)
+        join.apply(left=with_ops(L1, 1), batch_id=100)
         # right stream's ids TRAIL the left stream's
-        jmv.apply_right(with_ops(R1, 1), batch_id=1)
+        join.apply(right=with_ops(R1, 1), batch_id=1)
         assert sorted(map(tuple, jmv.result().collect())) == [(1, 5), (2, 7)]
         # replay of each stream's last batch is still skipped per-stream
-        jmv.apply_right(with_ops(R1, 1), batch_id=1)
-        jmv.apply_left(with_ops(L1, 1), batch_id=100)
+        join.apply(right=with_ops(R1, 1), batch_id=1)
+        join.apply(left=with_ops(L1, 1), batch_id=100)
         assert sorted(map(tuple, jmv.result().collect())) == [(1, 5), (2, 7)]
 
 
