@@ -31,7 +31,13 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from risingwave_spark.streaming.mv import ChunkedState, MaterializedView, OP_COL, with_ops
+from risingwave_spark.streaming.mv import (
+    OP_COL,
+    ChunkedState,
+    MaterializedView,
+    non_strict_analysis,
+    with_ops,
+)
 
 #: warehouse directory prefixes an MV's state may live under (one per MV kind)
 MV_STATE_PREFIXES = ("mv_", "jmv_", "umv_", "topn_", "owmv_", "eowc_", "eowcow_")
@@ -711,15 +717,12 @@ def _non_strict(spark: SparkSession, recompute):
     the eval mode into each expression AT ANALYSIS, so toggling
     `spark.sql.ansi.enabled` around the recompute's plan construction
     pins legacy (null-padding) semantics into the MV's plan without
-    touching ad-hoc batch behavior."""
+    touching ad-hoc batch behavior (`mv.non_strict_analysis`, whose lock
+    keeps concurrent branch folds from interleaving their swaps)."""
 
     def wrapped(rows):
-        old = spark.conf.get("spark.sql.ansi.enabled", "true")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        try:
+        with non_strict_analysis(spark):
             return recompute(rows)
-        finally:
-            spark.conf.set("spark.sql.ansi.enabled", old)
 
     return wrapped
 
@@ -1619,8 +1622,7 @@ class Engine:
             commit_ts=self._now_epoch(),
         )
         t._register()
-        for e in t.downstream:
-            e.apply_batch(batch)
+        self._fan_out(t.downstream, batch)
         # only MVs reachable from this table moved; plain views are SQL
         # temp views and re-resolve at read
         for n in self._closure([table]):
@@ -1629,6 +1631,76 @@ class Engine:
         # sinks drain whatever changelog chunks this batch produced
         for s in self.sinks.values():
             s.drain()
+
+    def _edge_groups(self, edges: list[Edge]) -> list[list[Edge]]:
+        """Split `edges` into groups that can fold at the same time: two
+        edges share a group when the MVs they reach (owner plus
+        `_closure`) overlap, and an owner of None overlaps everything.
+        Groups and the edges in each keep the order of `edges`."""
+
+        def reach_of(e: Edge) -> set | None:
+            if e.owner not in self.mv_handles:
+                return None if e.owner is None else {e.owner}
+            return {e.owner, *self._closure([e.owner])}
+
+        def overlap(a: set | None, b: set | None) -> bool:
+            return a is None or b is None or bool(a & b)
+
+        reach = [reach_of(e) for e in edges]
+        groups: list[list[int]] = []
+        for i, r in enumerate(reach):
+            hit = [g for g in groups if any(overlap(r, reach[j]) for j in g)]
+            merged = sorted([i, *(j for g in hit for j in g)])
+            groups = [g for g in groups if g not in hit] + [merged]
+        return [[edges[i] for i in g] for g in sorted(groups)]
+
+    def _fan_out(self, edges: list[Edge], batch: DataFrame) -> None:
+        """Fold `batch` along `edges`: independent groups (`_edge_groups`)
+        fold at the same time — the calling thread takes the first, each
+        other one gets its own InheritableThread, which carries the
+        statement's Spark job group (reference: one barrier reaches every
+        fragment at once, and MVs that share only an input run as
+        separate actors). A group reaching an MV with its own
+        `parallelism` folds alone afterwards: its shuffle-partition swap
+        is session-wide. Every group runs even when another fails; the
+        first failed group's error is raised once all are done. Nothing
+        an edge reaches may take `_ddl_lock`, which the statement thread
+        holds."""
+        from pyspark import InheritableThread
+
+        def own_parallelism(g: list[Edge]) -> bool:
+            owners = [e.owner for e in g if e.owner in self.mv_handles]
+            return any(
+                getattr(self.mv_handles[n].view, "parallelism", None)
+                for n in [*owners, *self._closure(owners)]
+            )
+
+        groups = self._edge_groups(edges)
+        together = [g for g in groups if not own_parallelism(g)]
+        alone = [g for g in groups if own_parallelism(g)]
+        errors: dict[int, BaseException] = {}
+
+        def run(i: int, g: list[Edge]) -> None:
+            try:
+                for e in g:
+                    e.apply_batch(batch)
+            except BaseException as ex:  # noqa: BLE001 - re-raised below
+                errors[i] = ex
+
+        threads = [
+            InheritableThread(target=run, args=(i, g), session=self.spark)
+            for i, g in enumerate(together[1:], start=1)
+        ]
+        for th in threads:
+            th.start()
+        if together:
+            run(0, together[0])
+        for th in threads:
+            th.join()
+        for i, g in enumerate(alone, start=len(together)):
+            run(i, g)
+        if errors:
+            raise errors[min(errors)]
 
     # ---- temporal-filter MVs (Now executor) ------------------------
     def _current_now(self):

@@ -86,8 +86,19 @@ def _split_top_level(text: str) -> list[str]:
 
 
 def _status(spark: SparkSession, tag: str) -> DataFrame:
-    """Command-tag result (the reference returns e.g. `CREATE_TABLE`)."""
-    return spark.createDataFrame([(tag,)], "status string")
+    """Command-tag result (the reference returns e.g. `CREATE_TABLE`): a
+    one-row `status` frame that carries its tag as a string too, so the
+    pgwire server answers with `command_tag` and runs no Spark job. The
+    frame is a VALUES literal (a local relation), so reading it needs no
+    job or Python worker either."""
+    df = spark.sql("SELECT * FROM VALUES (:tag) AS t(status)", args={"tag": tag})
+    df._command_tag = tag
+    return df
+
+
+def command_tag(df: DataFrame) -> str | None:
+    """The tag `_status` attached to a DDL/DML result, else None."""
+    return vars(df).get("_command_tag")
 
 
 # ---------------------------------------------------------------- regexes
@@ -2603,10 +2614,21 @@ def _insert_aligned_rows(engine: "Engine", t, cols, rows: DataFrame):
     # table itself must see the pre-insert snapshot (same discipline as
     # Engine.delete's localCheckpoint)
     aligned = aligned.localCheckpoint(eager=True)
-    n = aligned.count()
-    if has_rowid:
-        t._rowid_next = t._rowid_next + n
-    engine.insert(t.name, aligned)
+    if getattr(t, "on_conflict", None):
+        # the fold takes the conflict-resolved rows, not these: count them
+        # (ON CONFLICT needs a PRIMARY KEY, so there are no row ids)
+        n = aligned.count()
+        engine.insert(t.name, aligned)
+        return aligned, n
+    before = t.state.last_fold
+    try:
+        engine.insert(t.name, aligned)
+    finally:
+        # the row count is the table chunk's parquet footer count; the
+        # ids stay consumed once the fold landed, even if an MV failed
+        n = t.state.last_fold["v_rows"] if t.state.last_fold is not before else 0
+        if has_rowid:
+            t._rowid_next += n
     return aligned, n
 
 

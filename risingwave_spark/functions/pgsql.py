@@ -376,9 +376,14 @@ def pg_to_spark_sql(sql: str) -> str:
         flags=re.I,
     )
 
-    # regex match operators (avoid touching `!~~` / `~~` which are LIKE)
-    masked = re.sub(r"(\S+)\s+!~\s+", r"\1 NOT RLIKE ", masked)
-    masked = re.sub(r"(\S+)\s+~\s+(?=\x00)", r"\1 RLIKE ", masked)
+    # regex match operators (avoid touching `!~~` / `~~` which are LIKE).
+    # The operand token is matched from its start only and possessively,
+    # so each token is scanned once: linear in the text (an unanchored
+    # `\S+` is retried at every suffix of a long token — quadratic on
+    # VALUES lists).
+    if "~" in masked:
+        masked = re.sub(r"(?<!\S)(\S++)\s+!~\s+", r"\1 NOT RLIKE ", masked)
+        masked = re.sub(r"(?<!\S)(\S++)\s+~\s+(?=\x00)", r"\1 RLIKE ", masked)
 
     # TUMBLE/HOP window TVFs in ad-hoc batch queries (reference
     # binder/relation/window_table_function.rs; hop_window.rs row

@@ -59,6 +59,7 @@ import socketserver
 import struct
 import threading
 
+from risingwave_spark.frontend import command_tag
 from risingwave_spark.sources.pgwire import (
     OID_BOOL,
     OID_DATE,
@@ -89,7 +90,7 @@ _DTYPE_OID = {
 }
 
 #: statement verbs that produce a result set (everything else returns
-#: a command tag from the engine's status frame)
+#: the command tag the engine attached to its status frame)
 _ROWSET_VERBS = {
     "select", "with", "values", "table", "show", "describe", "desc",
     "explain", "fetch",
@@ -621,12 +622,8 @@ class PgWireServer:
                             return _Results(
                                 cols, None, "FETCH", rows=df.collect())
                         return _Results(cols, df, "SELECT")
-                    # DDL/DML: the engine returns a command-tag frame
-                    tag = "OK"
-                    if df.columns == ["status"]:
-                        got = df.collect()
-                        if got:
-                            tag = str(got[0][0]).replace("_", " ")
+                    # DDL/DML: the engine's status frame carries its tag
+                    tag = (command_tag(df) or "OK").replace("_", " ")
                     # PG spells the txn-open tag BEGIN, not the verb
                     if tag == "START TRANSACTION":
                         tag = "BEGIN"

@@ -9,6 +9,10 @@ Arrow for the Python boundary. Only `spark.driver.memory` is local-only.
 from __future__ import annotations
 
 import os
+import time
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -38,3 +42,39 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession, timeout_s: float = 30.0) -> Iterator[list[int]]:
+    """Count the Spark jobs a block runs: yields a list that holds the
+    block's job ids once the block exits.
+
+    The block runs under a fresh job group, read back through the status
+    tracker's public `getJobIdsForGroup`; threads the block starts as
+    `pyspark.InheritableThread` inherit the group, so their jobs count
+    too. The status tracker learns of jobs asynchronously, so on exit one
+    fence job runs in a second group, and the count is read once the
+    fence shows up (the tracker's events arrive in order). The caller's
+    own job group is restored."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, "spark_jobs")
+    try:
+        yield ids
+    finally:
+        sc.setJobGroup(group + "-fence", "spark_jobs fence")
+        try:
+            sc.parallelize([0], 1).collect()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        st = sc.statusTracker()
+        deadline = time.monotonic() + timeout_s
+        while not st.getJobIdsForGroup(group + "-fence") and time.monotonic() < deadline:
+            time.sleep(0.01)
+        ids.extend(sorted(st.getJobIdsForGroup(group)))

@@ -265,53 +265,44 @@ class RetractableStreamJoin:
                 affected, buckets=touched, affected_vals=affected_vals
             )
 
-        out_changelog = None
+        if affected_vals is not None:
+            is_aff = key_values_filter(self.jk[0], *affected_vals)
+            semi = lambda d: d.filter(is_aff)  # noqa: E731
+            anti = lambda d: d.filter(~is_aff)  # noqa: E731
+        else:
+            semi = lambda d: d.join(  # noqa: E731
+                affected, nullsafe_cond(d, affected, self.jk), "left_semi"
+            )
+            anti = lambda d: d.join(  # noqa: E731
+                affected, nullsafe_cond(d, affected, self.jk), "left_anti"
+            )
+        prev_t, content = None, recomputed
         if self.mv.exists():
             if touched is None:
                 touched = self.mv.touched_buckets(affected)
             prev_t = self.mv.read_buckets(touched)
-            if affected_vals is not None:
-                is_aff = key_values_filter(self.jk[0], *affected_vals)
-                semi = lambda: prev_t.filter(is_aff)  # noqa: E731
-                anti = lambda: prev_t.filter(~is_aff)  # noqa: E731
-            else:
-                semi = lambda: prev_t.join(  # noqa: E731
-                    affected, nullsafe_cond(prev_t, affected, self.jk), "left_semi"
-                )
-                anti = lambda: prev_t.join(  # noqa: E731
-                    affected, nullsafe_cond(prev_t, affected, self.jk), "left_anti"
-                )
-            if self.downstream:
-                out_changelog = with_ops(semi(), -1).unionByName(
-                    with_ops(recomputed, 1)
-                )
-            untouched_t = anti()
-            self.mv.overwrite_buckets(untouched_t.unionByName(recomputed), touched)
+            content = anti(prev_t).unionByName(recomputed)
         else:
-            if self.downstream:
-                out_changelog = with_ops(recomputed, 1)
-            self.mv.write(recomputed)
-        if out_changelog is not None:
-            # MATERIALIZE before forwarding: the changelog plan embeds
-            # this level's whole recompute tree, and a deep chain would
-            # otherwise compound plans level-by-level — exponential plan
-            # text (driver-heap OOM in the listener) and repeated
-            # recomputation in every downstream fold. localCheckpoint
-            # truncates the lineage to the computed blocks (the
-            # reference materializes chunks between executors the same
-            # way).
-            out_changelog = out_changelog.localCheckpoint(eager=True)
-            # forwarded redelivery pointers are namespaced by (incoming
-            # namespace, which sides folded): two independent upstream
-            # streams driving the two sides never share a downstream
-            # LAST_BATCH pointer, so neither stream's ids can wrongly
-            # skip the other's fold (ADVICE r4 #5)
-            side_tag = ("L" if left is not None else "") + (
-                "R" if right is not None else ""
-            )
-            fwd_ns = f"{batch_ns}_{side_tag}" if batch_ns else (side_tag or None)
-            for d in self.downstream:
-                d.apply_batch(out_changelog, batch_id=batch_id, batch_ns=fwd_ns)
+            touched = None  # first materialization: every bucket
+        if not self.downstream:
+            self.mv.overwrite_buckets(content, touched)
+            return
+        # every recomputed row's __jk is an affected key, so the affected
+        # rows of the new epoch ARE the recompute
+        out_changelog = self.mv.overwrite_and_diff(
+            content, touched, prev_t, semi, materialize=affected_vals is None
+        )
+        # forwarded redelivery pointers are namespaced by (incoming
+        # namespace, which sides folded): two independent upstream
+        # streams driving the two sides never share a downstream
+        # LAST_BATCH pointer, so neither stream's ids can wrongly
+        # skip the other's fold (ADVICE r4 #5)
+        side_tag = ("L" if left is not None else "") + (
+            "R" if right is not None else ""
+        )
+        fwd_ns = f"{batch_ns}_{side_tag}" if batch_ns else (side_tag or None)
+        for d in self.downstream:
+            d.apply_batch(out_changelog, batch_id=batch_id, batch_ns=fwd_ns)
 
     def _touched_buckets(self, folded_l: bool, folded_r: bool) -> list[int] | None:
         """Union of the folded sides' batch key-buckets, from local chunk

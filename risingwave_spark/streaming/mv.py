@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -243,6 +244,13 @@ def buckets_of_values(vals: list, has_null: bool, n_buckets: int) -> list[int]:
     return sorted(buckets)
 
 
+#: held for the whole span of every `spark.sql.ansi.enabled` swap: the
+#: independent MV branches of one DML statement fold on concurrent
+#: threads, and a restore interleaved with another thread's swap would
+#: leave the session non-strict (reentrant: a recompute may nest a swap)
+_ANSI_SWAP_LOCK = threading.RLock()
+
+
 def non_strict_analysis(spark: SparkSession):
     """Context manager: plans CONSTRUCTED inside the block analyze under
     ansi=false, so compute errors (div/0, bad casts) pad NULL per
@@ -252,17 +260,19 @@ def non_strict_analysis(spark: SparkSession):
     NonStrictExpression). Spark bakes the eval mode into expressions at
     ANALYSIS, so the toggle pins legacy semantics into the streaming
     plan without touching ad-hoc batch behavior; the session's strict
-    ANSI mode is restored on exit."""
+    ANSI mode is restored on exit. Swaps on concurrent threads take
+    turns (`_ANSI_SWAP_LOCK`)."""
     from contextlib import contextmanager
 
     @contextmanager
     def _cm():
-        old = spark.conf.get("spark.sql.ansi.enabled", "true")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.ansi.enabled", old)
+        with _ANSI_SWAP_LOCK:
+            old = spark.conf.get("spark.sql.ansi.enabled", "true")
+            spark.conf.set("spark.sql.ansi.enabled", "false")
+            try:
+                yield
+            finally:
+                spark.conf.set("spark.sql.ansi.enabled", old)
 
     return _cm()
 
@@ -598,10 +608,16 @@ class _BucketedMvTable:
             out = flat if out is None else out.unionByName(flat)
         return out
 
-    def overwrite_buckets(self, df: DataFrame, touched: list[int] | None) -> None:
+    def overwrite_buckets(
+        self, df: DataFrame, touched: list[int] | None, before_flip=None
+    ) -> None:
         """Write `df` (the complete new content of `touched` buckets; pass
         None on first materialization to mean "all") as a new epoch, then
-        flip the manifest — ONE Spark job either way.
+        flip the manifest — ONE Spark job either way. `before_flip(rows)`,
+        if given, runs between the two with a frame reading the epoch
+        just written: a caller derives what it must persist before the
+        flip (the changelog) from those files instead of re-running
+        `df`'s plan. If it raises, the manifest is left as it was.
 
         Adaptive layout (measured): a batch touching most of the MV writes
         a FLAT epoch (plain coalesced parquet — no per-bucket small files,
@@ -618,7 +634,7 @@ class _BucketedMvTable:
         flat = touched is None or len(touched) >= 0.5 * covered
         if flat:
             df.coalesce(8).write.mode("overwrite").parquet(out)
-            self._manifest.setdefault("flat", []).append(epoch)
+            new_paths = [out]
             for b in range(self.n_buckets) if touched is None else touched:
                 buckets[b] = epoch  # empty buckets are harmless: the
                 # bucket-expr filter just finds no rows for them
@@ -635,6 +651,7 @@ class _BucketedMvTable:
                 for d in os.listdir(out)
                 if d.startswith("__bucket=")
             }
+            new_paths = [self._leaf(b, epoch) for b in sorted(written)]
             for b in touched:
                 if b in written:
                     buckets[b] = epoch
@@ -642,6 +659,10 @@ class _BucketedMvTable:
                     buckets.pop(b, None)  # bucket emptied (all groups gone)
         if self._manifest["schema"] is None:
             self._manifest["schema"] = self._json.dumps(df.schema.jsonValue())
+        if before_flip is not None:
+            before_flip(self._read_paths(new_paths))
+        if flat:
+            self._manifest.setdefault("flat", []).append(epoch)
         now_referenced = set(buckets.values()) | {epoch}
         # GC: epochs retired by the PREVIOUS write (grace period for lazy
         # DataFrames handed downstream) that are still unreferenced now
@@ -655,6 +676,42 @@ class _BucketedMvTable:
         self._manifest["buckets"] = {str(b): ep for b, ep in buckets.items()}
         self._manifest["epoch"] = epoch
         self._flip_manifest()
+
+    def overwrite_and_diff(
+        self,
+        content: DataFrame,
+        touched: list[int] | None,
+        prev: DataFrame | None,
+        semi,
+        materialize: bool,
+        log=None,
+    ) -> DataFrame:
+        """Write `content` as the next epoch like `overwrite_buckets`
+        (`prev` = the touched buckets' prior rows, None on first
+        materialization) and return the write's changelog, read back from
+        files instead of re-running `content`'s plan: −1 the affected rows
+        (`semi`) of the prior epochs, which the write keeps until the next
+        one, +1 those of the epoch just written. `log(changelog)` runs
+        before the manifest flips, so on a crash in between a redelivered
+        batch overwrites the same chunk. Under a literal key set the
+        changelog is two filtered file scans; `materialize` checkpoints it
+        when the key set is a frame that may derive from an upstream's
+        plan, or plans would compound down an MV chain — exponential plan
+        text (driver-heap OOM in the listener)."""
+        out = None
+
+        def before_flip(new_rows: DataFrame) -> None:
+            nonlocal out
+            out = with_ops(semi(new_rows), 1)
+            if prev is not None:
+                out = with_ops(semi(prev), -1).unionByName(out)
+            if materialize:
+                out = out.localCheckpoint(eager=True)
+            if log is not None:
+                log(out)
+
+        self.overwrite_buckets(content, touched, before_flip=before_flip)
+        return out
 
     def write(self, df: DataFrame) -> None:
         """Full materialization (first backfill)."""
@@ -1229,7 +1286,9 @@ class _RetractableView:
         `handler/alter_parallelism.rs` — each streaming job carries its
         own parallelism; Spark's analog is the shuffle-partition count
         of this MV's maintenance fold). Statements serialize under the
-        engine lock, so the scoped conf swap cannot leak across jobs."""
+        engine lock, and the engine folds a branch holding such an MV
+        alone, after the concurrent branches (`Engine._fan_out`), so the
+        session-wide conf swap never interleaves with another fold."""
         par = getattr(self, "parallelism", None)
         if not par:
             return self._apply_batch_inner(batch, batch_id, batch_ns)
@@ -1365,6 +1424,14 @@ class _RetractableView:
         batch_ns: str | None = None,
         affected_vals: tuple[list, bool] | None = None,
     ) -> None:
+        """Recompute the affected groups from state and write the touched
+        buckets' new content (untouched groups ∪ recomputed) as one new
+        MV epoch — the only job that runs the recompute. When a
+        downstream view or a subscription wants this batch's changelog,
+        it is read back from files, not recomputed: −1 rows are the
+        affected groups of the prior epochs, +1 rows those of the epoch
+        just written. The changelog is logged before the manifest flips
+        and forwarded after it."""
         annotate = self.key_of or (lambda d: d)
         st = annotate(self.state.read(buckets=touched))
         if affected_vals is not None:
@@ -1384,42 +1451,29 @@ class _RetractableView:
                 affected, nullsafe_cond(d, affected, self.keys), "left_anti"
             )
         recomputed = self._recompute(semi(st))
-        out_changelog = None
-        want_changelog = bool(self.downstream) or self.emit_changelog
+        prev_t, content = None, recomputed
         if self.mv.exists():
             if touched is None:
                 touched = self.mv.touched_buckets(affected)
             prev_t = self.mv.read_buckets(touched)
-            if want_changelog:
-                old_affected = semi(prev_t)
-                out_changelog = with_ops(old_affected, -1).unionByName(
-                    with_ops(recomputed, 1)
-                )
-            if self.emit_changelog:
-                # persist BEFORE the MV flip: on a crash in between, the
-                # redelivered batch overwrites the same chunk (idempotent)
-                self._log_changelog(out_changelog)
-            untouched_t = anti(prev_t)
-            self.mv.overwrite_buckets(untouched_t.unionByName(recomputed), touched)
+            content = anti(prev_t).unionByName(recomputed)
         else:
-            if want_changelog:
-                out_changelog = with_ops(recomputed, 1)
-            if self.emit_changelog:
-                self._log_changelog(out_changelog)
-            self.mv.write(recomputed)
-        if out_changelog is not None:
-            # materialize before forwarding (lineage truncation — see
-            # RetractableStreamJoin.apply: deep MV chains would compound
-            # plans level-by-level otherwise)
-            out_changelog = out_changelog.localCheckpoint(eager=True)
-            # batch_id rides along so the whole MV chain shares one
-            # redelivery horizon: a replayed parent batch re-forwards the
-            # (identical, state-derived) changelog and each child skips
-            # its own already-committed fold. The namespace passes
-            # through unchanged — this view has one upstream, so its
-            # children see the same id sequence it did.
-            for d in self.downstream:
-                d.apply_batch(out_changelog, batch_id=batch_id, batch_ns=batch_ns)
+            touched = None  # first materialization: every bucket
+        if not (self.downstream or self.emit_changelog):
+            self.mv.overwrite_buckets(content, touched)
+            return
+        out_changelog = self.mv.overwrite_and_diff(
+            content, touched, prev_t, semi, materialize=affected_vals is None,
+            log=self._log_changelog if self.emit_changelog else None,
+        )
+        # batch_id rides along so the whole MV chain shares one
+        # redelivery horizon: a replayed parent batch re-forwards the
+        # (identical, state-derived) changelog and each child skips its
+        # own already-committed fold. The namespace passes through
+        # unchanged — this view has one upstream, so its children see
+        # the same id sequence it did.
+        for d in self.downstream:
+            d.apply_batch(out_changelog, batch_id=batch_id, batch_ns=batch_ns)
 
     def _log_changelog(self, chunk: DataFrame) -> None:
         cid = chunk_base(self.changelog_dir) + self.state._seq - 1

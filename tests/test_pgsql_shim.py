@@ -214,3 +214,30 @@ def test_upsert_formatter_matches_reference_ops():
         ({"id": 1}, {"id": 1, "v": "b"}),
         ({"id": 2}, None),
     ]
+
+
+def test_insert_values_rewrite_is_linear():
+    """`pg_to_spark_sql` on an `INSERT … VALUES` text grows linearly with
+    its rows: 4× the rows takes < 6× the time (an unanchored operand
+    token in the `~` operator passes backtracks quadratically over long
+    runs of non-space text). Best of five runs at each size."""
+    import time
+
+    def insert(n: int) -> str:
+        rows = ",".join(f"({i},{i * 7 % 1000},{i % 13},{i * 0.25:.2f})" for i in range(n))
+        return "INSERT INTO lineitem (l_id, l_oid, l_qty, l_price) VALUES " + rows
+
+    def best(text: str) -> float:
+        out = float("inf")
+        for _ in range(5):
+            t0 = time.perf_counter()
+            pg_to_spark_sql(text)
+            out = min(out, time.perf_counter() - t0)
+        return out
+
+    small, large = best(insert(300)), best(insert(1200))
+    assert large < 6 * small, (small, large)
+    # the operators themselves still rewrite
+    assert pg_to_spark_sql("SELECT a ~ 'x', b !~ 'y', c !~~ 'z' FROM t") == (
+        "SELECT a RLIKE 'x', b NOT RLIKE 'y', c !~~ 'z' FROM t"
+    )

@@ -1151,6 +1151,7 @@ def test_literal_keyset_fallback_join_path(spark, tmp_path, monkeypatch):
     in the r12 broadcast-join job shape (chunk write + affected-keys
     broadcast build + splice write per fold — bounded, no per-fold
     O(state) re-derivation jobs)."""
+    from risingwave_spark.session import spark_jobs
     from risingwave_spark.streaming.mv import MaterializedGroupAgg
 
     monkeypatch.setenv("SPARK_GRAFT_KEYSET_MAX_DISTINCT", "0")
@@ -1158,23 +1159,22 @@ def test_literal_keyset_fallback_join_path(spark, tmp_path, monkeypatch):
         [(i, i % 5, float(i)) for i in range(200)], "event_id int, k int, value double"
     )
     mv = MaterializedGroupAgg(spark, str(tmp_path / "mv"), ["k"], "event_id", "value")
-    next_job = lambda: spark.sparkContext._jsc.sc().dagScheduler().nextJobId()  # noqa: E731
     jobs = []
     for i in range(4):
         mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i), 1))
         assert mv._chunk_affected_values(mv.state.last_fold) is None
-        j0 = next_job()
-        mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i).limit(0), 1))
-        jobs.append(next_job() - j0)
+        with spark_jobs(spark) as ids:
+            mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i).limit(0), 1))
+        jobs.append(len(ids))
     # the join path per warm fold: chunk write + (empty batch detected
     # from footers, splice skipped) — an EMPTY fold must stay O(1) jobs
     # even on the fallback path (no take(1)/re-eval jobs)
     assert all(j <= 2 for j in jobs[1:]), jobs
     # non-empty folds on the join path: bounded small job count (chunk
     # write + broadcast build + splice shuffle/write + listing probes)
-    j0 = next_job()
-    mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == 0), 1))
-    assert next_job() - j0 <= 6, next_job() - j0
+    with spark_jobs(spark) as ids:
+        mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == 0), 1))
+    assert len(ids) <= 6, ids
     v = F.col("value")
     # slice 0 was folded twice (insert chunks don't dedup row ids), so
     # the expected aggregate is over the doubled slice-0 input
