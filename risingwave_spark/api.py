@@ -249,10 +249,19 @@ def _join_edge(owner: str, join, side: str, pre: str | None = None, ren: dict | 
         drop = [c for c in batch.columns if c.startswith("__jk")]
         b = _ren_batch(batch.drop(*drop) if drop else batch, ren)
         if pre:
-            b = b.filter(F.expr(pre))
+            b = _pre_filter(b, pre)
         join.apply(**{side: b}, batch_id=batch_id, batch_ns=batch_ns)
 
     return Edge(owner, fold)
+
+
+def _pre_filter(df: DataFrame, pre: str) -> DataFrame:
+    """`df` filtered by a join MV's pushed-down predicate `pre`,
+    analyzed non-strict like the rest of the MV's streaming plan (a row
+    whose predicate errors is dropped: NULL is not true), at backfill
+    and on every fold alike."""
+    with non_strict_analysis(df.sparkSession):
+        return df.filter(F.expr(pre))
 
 
 class TopNReadMv:
@@ -708,21 +717,23 @@ class StreamUnionMv:
         return self.rows.result().drop("__ubranch", "__urid")
 
 
-def _non_strict(spark: SparkSession, recompute):
-    """Streaming expression evaluation is NON-STRICT in the reference
+def _non_strict(spark: SparkSession, transform):
+    """`transform(rows)` (an MV's recompute or key annotation) with its
+    plan analyzed non-strict.
+
+    Streaming expression evaluation is NON-STRICT in the reference
     (`e2e_test/streaming/non_strict_mode.slt`; issue 4625 / PR 12461:
     compute errors — division by zero, bad casts — pad NULL per
     expression node instead of failing the job, so one poisoned row
     cannot kill an MV). Batch queries stay strict (ANSI). Spark bakes
     the eval mode into each expression AT ANALYSIS, so toggling
-    `spark.sql.ansi.enabled` around the recompute's plan construction
-    pins legacy (null-padding) semantics into the MV's plan without
-    touching ad-hoc batch behavior (`mv.non_strict_analysis`, whose lock
-    keeps concurrent branch folds from interleaving their swaps)."""
+    `spark.sql.ansi.enabled` around the plan's construction pins legacy
+    (null-padding) semantics into the MV's plan without touching ad-hoc
+    batch behavior (`mv.non_strict_analysis`)."""
 
     def wrapped(rows):
         with non_strict_analysis(spark):
-            return recompute(rows)
+            return transform(rows)
 
     return wrapped
 
@@ -1089,7 +1100,7 @@ class Engine:
                 row_id,
                 recompute,
             )
-        mv.key_of = key_of
+        mv.key_of = _non_strict(self.spark, key_of) if key_of else None
         # Backfill: current base state (the reference's
         # snapshot-then-switchover bootstrap). A re-opened MV already
         # holds its materialization — re-attach, don't re-run; an MV
@@ -1262,6 +1273,8 @@ class Engine:
         then wires the changelog cascade + per-input feeds."""
         if recompute is not None:
             recompute = _non_strict(self.spark, recompute)  # non_strict_mode.slt
+        if key_of is not None:
+            key_of = _non_strict(self.spark, key_of)
         resolved = [self._resolve_join_input(t) for t in tbls]
         renames = renames or [None] * len(tbls)
         resolved = [
@@ -1288,10 +1301,10 @@ class Engine:
             if not j.mv.exists():
                 left = resolved[0][1] if i == 0 else chain.joins[i - 1].result()
                 if i == 0 and pre_of[0]:
-                    left = left.filter(F.expr(pre_of[0]))
+                    left = _pre_filter(left, pre_of[0])
                 right = resolved[i + 1][1]
                 if pre_of[i + 1]:
-                    right = right.filter(F.expr(pre_of[i + 1]))
+                    right = _pre_filter(right, pre_of[i + 1])
                 j.apply(
                     left=with_ops(left, 1),
                     right=with_ops(right, 1),
@@ -1665,7 +1678,15 @@ class Engine:
         is session-wide. Every group runs even when another fails; the
         first failed group's error is raised once all are done. Nothing
         an edge reaches may take `_ddl_lock`, which the statement thread
-        holds."""
+        holds.
+
+        Every plan the groups build analyzes non-strict: one
+        `non_strict_analysis` span covers the whole fan-out. ANSI mode is
+        session-wide, so without it a plan built outside a span (a union
+        arm, a pushed-down join filter, a TopN order key) would analyze
+        strict or not depending on whether another thread's span was
+        open at that moment. Non-strict is the reference's rule for every
+        streaming executor (`non_strict_mode.slt`)."""
         from pyspark import InheritableThread
 
         def own_parallelism(g: list[Edge]) -> bool:
@@ -1691,14 +1712,15 @@ class Engine:
             InheritableThread(target=run, args=(i, g), session=self.spark)
             for i, g in enumerate(together[1:], start=1)
         ]
-        for th in threads:
-            th.start()
-        if together:
-            run(0, together[0])
-        for th in threads:
-            th.join()
-        for i, g in enumerate(alone, start=len(together)):
-            run(i, g)
+        with non_strict_analysis(self.spark):
+            for th in threads:
+                th.start()
+            if together:
+                run(0, together[0])
+            for th in threads:
+                th.join()
+            for i, g in enumerate(alone, start=len(together)):
+                run(i, g)
         if errors:
             raise errors[min(errors)]
 

@@ -54,7 +54,7 @@ from risingwave_spark.functions.pgsql import (
     _unmask,
     pg_to_spark_sql,
 )
-from risingwave_spark.streaming.mv import OP_COL, with_ops
+from risingwave_spark.streaming.mv import OP_COL, non_strict_analysis, with_ops
 
 if TYPE_CHECKING:  # pragma: no cover
     from risingwave_spark.api import Engine
@@ -5087,8 +5087,11 @@ def _handle_create_union_mv(
             body += f" WHERE {pg_to_spark_sql(_unmask(where, lits))}"
 
         def transform(batch: DataFrame, i=i, tmp=tmp, body=body) -> DataFrame:
+            # the arm's expressions evaluate non-strict, at backfill and
+            # on every fold alike (non_strict_mode.slt)
             batch.createOrReplaceTempView(tmp)
-            return spark.sql(body).withColumn("__ubranch", F.lit(i))
+            with non_strict_analysis(spark):
+                return spark.sql(body).withColumn("__ubranch", F.lit(i))
 
         branches.append((tbl, transform))
 

@@ -46,9 +46,12 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
 _JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
+#: how long `spark_jobs` waits for the status tracker to report its fence job
+_FENCE_WAIT_S = 30.0
+
 
 @contextmanager
-def spark_jobs(spark: SparkSession, timeout_s: float = 30.0) -> Iterator[list[int]]:
+def spark_jobs(spark: SparkSession) -> Iterator[list[int]]:
     """Count the Spark jobs a block runs: yields a list that holds the
     block's job ids once the block exits.
 
@@ -57,24 +60,28 @@ def spark_jobs(spark: SparkSession, timeout_s: float = 30.0) -> Iterator[list[in
     `pyspark.InheritableThread` inherit the group, so their jobs count
     too. The status tracker learns of jobs asynchronously, so on exit one
     fence job runs in a second group, and the count is read once the
-    fence shows up (the tracker's events arrive in order). The caller's
-    own job group is restored."""
+    fence shows up (the tracker's events arrive in order). If it has not
+    shown up within `_FENCE_WAIT_S`, TimeoutError: a partial count must
+    never pass for the block's. The caller's own job group is restored."""
     sc = spark.sparkContext
     saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
     group = f"spark-jobs-{uuid.uuid4().hex}"
+    fence = group + "-fence"
     ids: list[int] = []
     sc.setJobGroup(group, "spark_jobs")
     try:
         yield ids
+        sc.setJobGroup(fence, "spark_jobs fence")
+        sc.parallelize([0], 1).collect()
     finally:
-        sc.setJobGroup(group + "-fence", "spark_jobs fence")
-        try:
-            sc.parallelize([0], 1).collect()
-        finally:
-            for k, v in saved.items():
-                sc.setLocalProperty(k, v)
-        st = sc.statusTracker()
-        deadline = time.monotonic() + timeout_s
-        while not st.getJobIdsForGroup(group + "-fence") and time.monotonic() < deadline:
-            time.sleep(0.01)
-        ids.extend(sorted(st.getJobIdsForGroup(group)))
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + _FENCE_WAIT_S
+    while not st.getJobIdsForGroup(fence):
+        if time.monotonic() > deadline:
+            raise TimeoutError(
+                f"the status tracker did not report the fence job within {_FENCE_WAIT_S:.0f} s"
+            )
+        time.sleep(0.01)
+    ids.extend(sorted(st.getJobIdsForGroup(group)))

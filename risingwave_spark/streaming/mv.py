@@ -26,6 +26,7 @@ import os
 import re
 import shutil
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -244,13 +245,15 @@ def buckets_of_values(vals: list, has_null: bool, n_buckets: int) -> list[int]:
     return sorted(buckets)
 
 
-#: held for the whole span of every `spark.sql.ansi.enabled` swap: the
-#: independent MV branches of one DML statement fold on concurrent
-#: threads, and a restore interleaved with another thread's swap would
-#: leave the session non-strict (reentrant: a recompute may nest a swap)
-_ANSI_SWAP_LOCK = threading.RLock()
+#: open `non_strict_analysis` spans per session: [count, the ANSI value
+#: the first span found]. The independent MV branches of one DML
+#: statement fold on concurrent threads; their spans overlap, and the
+#: session stays non-strict until the last one closes
+_NON_STRICT_SPANS: dict = {}
+_NON_STRICT_LOCK = threading.Lock()
 
 
+@contextmanager
 def non_strict_analysis(spark: SparkSession):
     """Context manager: plans CONSTRUCTED inside the block analyze under
     ansi=false, so compute errors (div/0, bad casts) pad NULL per
@@ -259,22 +262,24 @@ def non_strict_analysis(spark: SparkSession):
     issue 4625; every streaming executor wraps its expressions in
     NonStrictExpression). Spark bakes the eval mode into expressions at
     ANALYSIS, so the toggle pins legacy semantics into the streaming
-    plan without touching ad-hoc batch behavior; the session's strict
-    ANSI mode is restored on exit. Swaps on concurrent threads take
-    turns (`_ANSI_SWAP_LOCK`)."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        with _ANSI_SWAP_LOCK:
+    plan without touching ad-hoc batch behavior. `spark.sql.ansi.enabled`
+    is session-wide: spans on any thread nest, the first one in sets
+    ansi=false and the last one out restores the session's value."""
+    with _NON_STRICT_LOCK:
+        span = _NON_STRICT_SPANS.get(spark)
+        if span is None:
             old = spark.conf.get("spark.sql.ansi.enabled", "true")
+            span = _NON_STRICT_SPANS[spark] = [0, old]
             spark.conf.set("spark.sql.ansi.enabled", "false")
-            try:
-                yield
-            finally:
-                spark.conf.set("spark.sql.ansi.enabled", old)
-
-    return _cm()
+        span[0] += 1
+    try:
+        yield
+    finally:
+        with _NON_STRICT_LOCK:
+            span[0] -= 1
+            if not span[0]:
+                del _NON_STRICT_SPANS[spark]
+                spark.conf.set("spark.sql.ansi.enabled", span[1])
 
 
 def chunk_base(changelog_dir: str) -> int:

@@ -152,6 +152,68 @@ def test_concurrent_folds_restore_ansi_and_batch_stays_strict(spark, tmp_path):
         eng.sql("SELECT 1/0 AS x").collect()
 
 
+def test_streaming_plans_are_non_strict_whatever_the_thread_timing(spark, tmp_path):
+    """A union arm and a join's pushed-down ON filter divide by zero
+    beside four non-strict MVs folding on other threads, under a short
+    switch interval. The arm pads NULL and the filter drops the row at
+    backfill and after every statement, and every branch thread sees
+    ANSI off while the batch propagates: no plan's strictness depends on
+    whether another thread's non-strict span happened to be open."""
+    eng = _new_engine(spark, tmp_path)
+    eng.sql("CREATE TABLE s (sk int8 PRIMARY KEY, w int8)")
+    eng.sql("INSERT INTO s VALUES (0, 1), (1, 1), (2, 1), (3, 1), (9, 1)")
+    for i in range(4):
+        eng.sql(
+            f"CREATE MATERIALIZED VIEW z{i} AS SELECT k, sum(v / (v - v) + {i}) AS bad "
+            "FROM t GROUP BY k"
+        )
+    # rows with v = 3 divide by zero (already at backfill: id 24 has k 0, v 3)
+    eng.sql(
+        "CREATE MATERIALIZED VIEW un AS SELECT id, 10 / (v - 3) AS q FROM t WHERE k = 0 "
+        "UNION ALL SELECT id, CAST(v AS double) AS q FROM t WHERE k = 1"
+    )
+    eng.sql(
+        "CREATE MATERIALIZED VIEW jf AS SELECT s.sk AS sk, count(*) AS n "
+        "FROM s JOIN t ON s.sk = t.k AND 10 / (t.v - 3) > 0 GROUP BY s.sk"
+    )
+    ansi: list = []
+
+    def probe(b, i, ns):
+        ansi.append(spark.conf.get("spark.sql.ansi.enabled"))
+
+    eng.tables["t"].downstream += [Edge(f"p{i}", probe) for i in range(2)]
+    assert len(eng._edge_groups(eng.tables["t"].downstream)) == 8
+    expect = {
+        "un": "SELECT id, CASE WHEN v <> 3 THEN 10 / (v - 3) END AS q FROM t WHERE k = 0 "
+        "UNION ALL SELECT id, CAST(v AS double) AS q FROM t WHERE k = 1",
+        "jf": "SELECT s.sk AS sk, count(*) AS n FROM s JOIN t ON s.sk = t.k AND t.v > 3 "
+        "GROUP BY s.sk",
+    }
+
+    def check(when: str) -> None:
+        for mv, body in expect.items():
+            assert _rows(eng.sql(f"SELECT * FROM {mv}")) == _rows(eng.sql(body)), (mv, when)
+
+    check("backfill")
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for stmt in (
+            "INSERT INTO t VALUES " + ",".join(f"({i},{i % 4},{i * 3 % 11})" for i in range(40, 70)),
+            "UPDATE t SET v = 3 WHERE id % 5 = 0",
+            "DELETE FROM t WHERE k = 1 AND id < 30",
+        ):
+            eng.sql(stmt)
+            check(stmt)
+    finally:
+        sys.setswitchinterval(switch)
+    assert ansi == ["false"] * 6
+    assert spark.conf.get("spark.sql.ansi.enabled") == before
+    with pytest.raises(Exception, match="(?i)divide|division"):
+        eng.sql("SELECT 1/0 AS x").collect()
+
+
 def test_branch_error_is_raised_after_every_branch_finished(spark, tmp_path):
     """The first failing group's error surfaces only once every other
     group has finished its fold."""
@@ -315,6 +377,32 @@ def test_spark_jobs_counts_the_block_and_its_threads(spark):
         assert not th.is_alive()
     assert len(threaded) >= 1
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") == outer
+
+
+def test_spark_jobs_never_passes_off_a_partial_count(spark, monkeypatch):
+    """If the status tracker never reports the fence job, the count
+    raises instead of returning the ids seen so far; an error inside the
+    block propagates as itself. The caller's job group is restored
+    either way."""
+    import risingwave_spark.session as session
+
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+
+    class Blind:
+        def getJobIdsForGroup(self, group):
+            return []
+
+    monkeypatch.setattr(session, "_FENCE_WAIT_S", 0.2)
+    monkeypatch.setattr(sc, "statusTracker", lambda: Blind())
+    with pytest.raises(TimeoutError):
+        with spark_jobs(spark):
+            spark.range(3).collect()
+    assert sc.getLocalProperty("spark.jobGroup.id") == outer
+    with pytest.raises(ZeroDivisionError):
+        with spark_jobs(spark):
+            1 / 0
+    assert sc.getLocalProperty("spark.jobGroup.id") == outer
 
 
 def test_command_tag_costs_no_spark_job(spark, tmp_path):
