@@ -37,6 +37,7 @@ from risingwave_spark.streaming.mv import (
     MaterializedView,
     non_strict_analysis,
     with_ops,
+    write_changelog,
 )
 
 #: warehouse directory prefixes an MV's state may live under (one per MV kind)
@@ -544,12 +545,7 @@ class TopNReadMv:
         if self._emit:
             # chunk id = snapshot transition id; overwrite-idempotent on
             # a replayed batch (same prev snapshot → same delta)
-            d = os.path.join(self.changelog_dir, f"c{ids[-1]}")
-            delta.coalesce(1).write.mode("overwrite").parquet(d)
-            import time as _time
-
-            with open(os.path.join(d, "_COMMIT_TS_MS"), "w") as f:
-                f.write(str(int(_time.time() * 1000)))
+            write_changelog(self.changelog_dir, ids[-1], delta.coalesce(1))
         for dn in self._downstream:
             dn.apply_batch(delta, batch_id=batch_id, batch_ns=batch_ns)
         # snapshot flips LAST: a crash before this point replays the

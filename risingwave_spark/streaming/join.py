@@ -33,16 +33,10 @@ from pyspark.sql import functions as F
 
 from risingwave_spark.streaming.mv import (
     ChunkedState,
+    KeySet,
     OP_COL,
     _BucketedMvTable,
-    buckets_from_chunks,
-    buckets_of_values,
-    chunk_key_frame,
-    chunk_key_values,
-    key_values_filter,
     non_strict_analysis,
-    nullsafe_cond,
-    with_ops,
 )
 
 _HOW = {"inner", "left", "left_outer", "right", "right_outer", "full", "full_outer", "left_semi", "left_anti"}
@@ -113,7 +107,9 @@ class RetractableStreamJoin:
         keys: list[str],
         batch_id: int | None,
         batch_ns: str | None,
-    ):
+    ) -> tuple[KeySet | None, bool]:
+        """Fold one side's chunk; return its key set under the `__jk*`
+        names (None when the side got no batch) and whether it folded."""
         if batch is None:
             return None, False
         # parsed-SQL one-call forms (r13 §B: Column chains pay a py4j
@@ -125,20 +121,10 @@ class RetractableStreamJoin:
             tomb_extra_cols=keys,
             batch_ns=batch_ns,
         )
-        # affected keys from the just-written chunk files (tiny local
-        # parquet) instead of re-evaluating the upstream batch plan —
-        # same shape as _RetractableView._chunk_affected; a provably
-        # empty fold (footer row counts) returns an empty marker so
-        # apply() can skip its take(1) probe entirely
-        lf = state.last_fold if did else None
-        if lf is not None and lf["v_rows"] + lf["t_rows"] == 0 and self.mv.exists():
-            # provably empty batch (and not the first materialization):
-            # contributes no affected keys
-            return "empty", did
-        aff = chunk_key_frame(self.spark, lf, keys)
-        if aff is not None:
-            return ("chunks", aff), did
-        return ("plan", batch.select(*keys).distinct()), did
+        keyset = KeySet.of_fold(
+            state, keys, plan=lambda: batch.select(*keys).distinct(), names=self.jk
+        )
+        return keyset, did
 
     def apply(
         self,
@@ -159,138 +145,41 @@ class RetractableStreamJoin:
         sequences, so every redelivery pointer — here and in the
         downstream changelog forward — is kept PER (namespace, side),
         never compared across sequences."""
-        aff_l, did_l = self._fold_side(
+        ks_l, did_l = self._fold_side(
             self.state_l, left, self.left_on, batch_id, batch_ns
         )
-        aff_r, did_r = self._fold_side(
+        ks_r, did_r = self._fold_side(
             self.state_r, right, self.right_on, batch_id, batch_ns
         )
-        if aff_l is None and aff_r is None:
+        if ks_l is None and ks_r is None:
             return
-
-        # affected join-key values from both sides, normalized to __jk*;
-        # "empty" sides (proved empty from the fold's chunk footers, zero
-        # Spark jobs) contribute nothing, "chunks" sides read the batch's
-        # just-written chunk files, "plan" sides fall back to the batch
-        # plan (replays / missing key columns)
-        parts, kinds = [], set()
-        for aff, on in ((aff_l, self.left_on), (aff_r, self.right_on)):
-            if aff is None or aff == "empty":
-                continue
-            kind, df = aff
-            kinds.add(kind)
-            parts.append(df.select(*[F.col(c).alias(j) for c, j in zip(on, self.jk)]))
-
-        def _compact_folded():
-            for st, did in ((self.state_l, did_l), (self.state_r, did_r)):
-                if did and self.compact_every and st._seq and st._seq % self.compact_every == 0:
-                    st.compact()
-
-        if not parts:
-            # every folded side proved empty: the state folds committed —
-            # recompute, splice and the downstream forward are all no-ops
-            # (previously this still cost a take(1) probe; what stops
-            # empty changelogs from rippling down a deep chain).
-            _compact_folded()
+        # one key set for both sides (`KeySet.union`): literal when both
+        # sides' values fit driver-side and share a type, so the affected
+        # -key filters on both state reads and the MV splice are InSet
+        # predicates with no broadcast-build jobs
+        keyset = ks_l.union(ks_r) if ks_l and ks_r else ks_l or ks_r
+        # compaction cadence: only a side that ACTUALLY folded this apply
+        # compacts (a side idling at a seq multiple, or a skipped replay,
+        # must not re-run the O(state) rewrite every apply); after the
+        # key set is read — the compacted chunk spans every bucket
+        for st, did in ((self.state_l, did_l), (self.state_r, did_r)):
+            st.compact_on_cadence(self.compact_every, did, keyset)
+        if self.mv.exists() and keyset.is_empty():
+            # every folded side proved empty (footers, or a probe of a
+            # replayed batch plan): recompute, splice and the downstream
+            # forward are no-ops — what stops empty changelogs from
+            # rippling down a deep chain
             return
-        affected = parts[0]
-        for p in parts[1:]:
-            affected = affected.unionByName(p)
-        affected = affected.distinct()
-        if kinds == {"plan"} and self.mv.exists() and not affected.take(1):
-            # only plan-derived sides have unknown emptiness — chunk-read
-            # sides are non-empty by their footer row counts, so any
-            # "chunks" side makes the union provably non-empty and the
-            # take(1) probe pure waste
-            _compact_folded()
-            return
-
-        # Literal key-set fast path (single join key, every folded side's
-        # distinct key values fit driver-side — see
-        # _RetractableView._chunk_affected_values): the four affected-key
-        # semi/anti joins below become null-safe InSet filters, dropping
-        # their broadcast-build Spark jobs per apply. Mixed value types
-        # across sides (int vs string keys) fall back to the join path.
-        affected_vals = None
-        if kinds == {"chunks"} and len(self.jk) == 1:
-            vlists = []
-            for aff, st, on in (
-                (aff_l, self.state_l, self.left_on),
-                (aff_r, self.state_r, self.right_on),
-            ):
-                if aff is None or aff == "empty":
-                    continue
-                v3 = chunk_key_values(st, on[0])
-                if v3 is None:
-                    vlists = None
-                    break
-                vlists.append(v3)
-            if vlists:
-                vals = set().union(*[set(v) for v, _ in vlists])
-                types = {type(v) for v in vals}
-                if types <= {int} or types <= {str}:
-                    affected_vals = (sorted(vals), any(hn for _, hn in vlists))
-
-        if affected_vals is not None:
-            touched = buckets_of_values(*affected_vals, self.mv.n_buckets)
-        else:
-            touched = self._touched_buckets(aff_l is not None, aff_r is not None)
-        # compaction cadence (same trade as _RetractableView): every N
-        # folds a side's chunks rewrite into the BUCKETED base layer, so
-        # the pruned state reads below stay O(touched buckets + recent
-        # flat chunks). Runs after the touched-bucket computation — the
-        # compacted single chunk spans every bucket, the batch does not.
-        # Only a side that ACTUALLY folded this apply compacts (a side
-        # idling at a seq multiple, or a batch_id-skipped replay, must
-        # not re-run the O(state) rewrite every apply).
-        if (
-            affected_vals is None
-            and "chunks" in kinds
-            and any(
-                did and self.compact_every and st._seq and st._seq % self.compact_every == 0
-                for st, did in ((self.state_l, did_l), (self.state_r, did_r))
-            )
-        ):
-            # compaction GCs the chunk files the lazy affected plan
-            # points at — pin the (tiny) key set first (the literal path
-            # holds the keys driver-side; nothing to pin)
-            affected = affected.localCheckpoint(eager=True)
-        _compact_folded()
         # per-key re-join plans analyze non-strict (non_strict_mode.slt:
         # a poisoned residual/projection expression pads NULL instead of
         # failing the fold — the reference wraps every streaming
         # executor's expressions in NonStrictExpression)
         with non_strict_analysis(self.spark):
-            recomputed = self._join_affected(
-                affected, buckets=touched, affected_vals=affected_vals
-            )
-
-        if affected_vals is not None:
-            is_aff = key_values_filter(self.jk[0], *affected_vals)
-            semi = lambda d: d.filter(is_aff)  # noqa: E731
-            anti = lambda d: d.filter(~is_aff)  # noqa: E731
-        else:
-            semi = lambda d: d.join(  # noqa: E731
-                affected, nullsafe_cond(d, affected, self.jk), "left_semi"
-            )
-            anti = lambda d: d.join(  # noqa: E731
-                affected, nullsafe_cond(d, affected, self.jk), "left_anti"
-            )
-        prev_t, content = None, recomputed
-        if self.mv.exists():
-            if touched is None:
-                touched = self.mv.touched_buckets(affected)
-            prev_t = self.mv.read_buckets(touched)
-            content = anti(prev_t).unionByName(recomputed)
-        else:
-            touched = None  # first materialization: every bucket
-        if not self.downstream:
-            self.mv.overwrite_buckets(content, touched)
-            return
+            recomputed = self._join_affected(keyset)
         # every recomputed row's __jk is an affected key, so the affected
         # rows of the new epoch ARE the recompute
-        out_changelog = self.mv.overwrite_and_diff(
-            content, touched, prev_t, semi, materialize=affected_vals is None
+        out_changelog = self.mv.splice(
+            recomputed, keyset, changelog=bool(self.downstream)
         )
         # forwarded redelivery pointers are namespaced by (incoming
         # namespace, which sides folded): two independent upstream
@@ -304,39 +193,16 @@ class RetractableStreamJoin:
         for d in self.downstream:
             d.apply_batch(out_changelog, batch_id=batch_id, batch_ns=fwd_ns)
 
-    def _touched_buckets(self, folded_l: bool, folded_r: bool) -> list[int] | None:
-        """Union of the folded sides' batch key-buckets, from local chunk
-        files (no Spark jobs; key VALUES bucket identically on either side)."""
-        out: set[int] = set()
-        for folded, state, keys in (
-            (folded_l, self.state_l, self.left_on),
-            (folded_r, self.state_r, self.right_on),
-        ):
-            if not folded:
-                continue
-            b = buckets_from_chunks(state, keys, self.mv.n_buckets)
-            if b is None:
-                return None
-            out.update(b)
-        return sorted(out)
+    def _affected_sides(self, keyset: KeySet) -> tuple[DataFrame, DataFrame]:
+        """Both sides' state rows of the key set's join keys: bucket-pruned
+        reads (a file-level superset) narrowed by the key set's filter."""
+        return (
+            keyset.semi(self.state_l.read(buckets=keyset.buckets), self.left_on),
+            keyset.semi(self.state_r.read(buckets=keyset.buckets), self.right_on),
+        )
 
-    def _join_affected(
-        self,
-        affected: DataFrame,
-        buckets: list[int] | None = None,
-        affected_vals: tuple[list, bool] | None = None,
-    ) -> DataFrame:
-        # bucket-pruned state reads (file-level superset of the affected
-        # keys' rows); the exact key filter is the semi-join below, or a
-        # literal InSet when the key values are known driver-side
-        L = self.state_l.read(buckets=buckets)
-        R = self.state_r.read(buckets=buckets)
-        if affected_vals is not None:
-            L = L.filter(key_values_filter(self.left_on[0], *affected_vals))
-            R = R.filter(key_values_filter(self.right_on[0], *affected_vals))
-        else:
-            L = L.join(affected, nullsafe_cond(L, affected, self.left_on, self.jk), "left_semi")
-            R = R.join(affected, nullsafe_cond(R, affected, self.right_on, self.jk), "left_semi")
+    def _join_affected(self, keyset: KeySet) -> DataFrame:
+        L, R = self._affected_sides(keyset)
         on = None
         for lc, rc in zip(self.left_on, self.right_on):
             c = L[lc] == R[rc]
@@ -395,23 +261,10 @@ class RetractableAsOfJoin(RetractableStreamJoin):
         self.payload_cols = payload_cols
         self.asof_how = how
 
-    def _join_affected(
-        self,
-        affected: DataFrame,
-        buckets: list[int] | None = None,
-        affected_vals: tuple[list, bool] | None = None,
-    ) -> DataFrame:
+    def _join_affected(self, keyset: KeySet) -> DataFrame:
         from risingwave_spark.operators.asof import asof_join_backward
 
-        L = self.state_l.read(buckets=buckets)
-        R = self.state_r.read(buckets=buckets)
-        if affected_vals is not None:
-            # literal key filter (see RetractableStreamJoin._join_affected)
-            L = L.filter(key_values_filter(self.left_on[0], *affected_vals))
-            R = R.filter(key_values_filter(self.right_on[0], *affected_vals))
-        else:
-            L = L.join(affected, nullsafe_cond(L, affected, self.left_on, self.jk), "left_semi")
-            R = R.join(affected, nullsafe_cond(R, affected, self.right_on, self.jk), "left_semi")
+        L, R = self._affected_sides(keyset)
         out = asof_join_backward(
             L,
             R,

@@ -48,21 +48,23 @@ def _statically_empty(df: DataFrame) -> bool:
         return False
 
 
+def _chunk_files(path: str) -> list[str]:
+    """Parquet files of a local chunk dir — flat, or nested one level
+    under `__bucket=N/` leaves."""
+    import glob as _glob
+
+    return _glob.glob(os.path.join(path, "*.parquet")) + _glob.glob(
+        os.path.join(path, "*", "*.parquet")
+    )
+
+
 def _parquet_rows(path: str) -> int:
     """Row count of a just-written local parquet dir from file footers —
     a driver-side metadata read, NOT a Spark job (state dirs are local;
     on a cluster this would be the sink's commit-message row count)."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
-    total = 0
-    # bucketed chunks nest files under __bucket=N/ — glob both levels
-    for f in _glob.glob(os.path.join(path, "*.parquet")) + _glob.glob(
-        os.path.join(path, "*", "*.parquet")
-    ):
-        total += pq.ParquetFile(f).metadata.num_rows
-    return total
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _chunk_files(path))
 
 
 def _parquet_spark_schema(path: str):
@@ -70,14 +72,10 @@ def _parquet_spark_schema(path: str):
     footer — driver-side metadata, no Spark job (same contract as
     `_parquet_rows`; skips the schema-inference job a bare
     spark.read.parquet would run). None if the dir has no files."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    for f in _glob.glob(os.path.join(path, "*.parquet")) + _glob.glob(
-        os.path.join(path, "*", "*.parquet")
-    ):
+    for f in _chunk_files(path):
         return from_arrow_schema(pq.ParquetFile(f).schema_arrow)
     return None
 
@@ -103,100 +101,12 @@ def _parquet_tree_schema(root: str):
     return None
 
 
-def chunk_key_frame(spark: SparkSession, lf: dict | None, cols: list[str]) -> DataFrame | None:
-    """`cols` of a just-folded batch's rows, read from the batch's chunk
-    files (`ChunkedState.last_fold`) instead of re-evaluating the
-    upstream batch plan — tiny local parquet with an explicit
-    footer-derived schema (no schema-inference job). None when there was
-    no fresh fold (replay) or a chunk lacks one of the columns."""
-    if lf is None:
-        return None
-    parts = []
-    for path, rows in ((lf["values"], lf["v_rows"]), (lf["tombs"], lf["t_rows"])):
-        if path and rows:
-            schema = _parquet_spark_schema(path)
-            if schema is None or not set(cols) <= set(schema.names):
-                return None
-            parts.append(spark.read.schema(schema).parquet(path).select(*cols))
-    if not parts:
-        return None  # empty batch: schema must come from the plan
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _keyset_cap(env: str, default: int) -> int:
-    """Literal key-set caps, env-overridable (SPARK_GRAFT_KEYSET_MAX_ROWS
-    / SPARK_GRAFT_KEYSET_MAX_DISTINCT): the caps decide when a fold takes
-    the driver-side literal path vs the broadcast-join path, so a cluster
-    deployment can tune them to its driver budget — and setting either to
-    0 forces the join path for every non-empty fold (an empty fold still
-    returns its empty key set), which is how the scale path is
-    exercised at bench scale (plans/r13 fallback capture + test)."""
-    try:
-        return int(os.environ[env])
-    except (KeyError, ValueError):
-        return default
-
-
-def chunk_key_values(
-    state: "ChunkedState",
-    key: str,
-    max_rows: int | None = None,
-    max_distinct: int | None = None,
-) -> tuple[list, bool] | None:
-    """Distinct values of a single key column of the batch `state` last
-    folded, read driver-side from the just-written local chunk files
-    (pyarrow column read — no Spark job). Returns (sorted non-null
-    values, has_null) or None when the fold was a replay, the chunk is
-    too large for driver-side work (max_rows bounds the read,
-    max_distinct bounds the literal list pushed into the plan), or the
-    dtype isn't int/string (float/timestamp literal round-trips may
-    diverge). Callers turn the values into an `isin` filter, replacing
-    the affected-keys semi/anti joins — and their broadcast-build Spark
-    jobs — with a literal InSet predicate (guide §2.4: the key set is
-    already materialized driver-side; don't re-derive it with a job)."""
-    import glob as _glob
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    if max_rows is None:
-        max_rows = _keyset_cap("SPARK_GRAFT_KEYSET_MAX_ROWS", 200_000)
-    if max_distinct is None:
-        max_distinct = _keyset_cap("SPARK_GRAFT_KEYSET_MAX_DISTINCT", 8192)
-    lf = state.last_fold
-    if lf is None or lf["v_rows"] + lf["t_rows"] > max_rows:
-        return None
-    vals: set = set()
-    has_null = False
-    for path, rows in ((lf["values"], lf["v_rows"]), (lf["tombs"], lf["t_rows"])):
-        if not path or not rows:
-            continue
-        for f in _glob.glob(os.path.join(path, "*.parquet")) + _glob.glob(
-            os.path.join(path, "*", "*.parquet")
-        ):
-            pf = pq.ParquetFile(f)
-            if pf.metadata.num_rows == 0:
-                continue
-            if key not in pf.schema_arrow.names:
-                return None
-            typ = pf.schema_arrow.field(key).type
-            if not (
-                pa.types.is_integer(typ)
-                or pa.types.is_string(typ)
-                or pa.types.is_large_string(typ)
-            ):
-                return None
-            col = pf.read(columns=[key]).column(0)
-            if col.null_count:
-                has_null = True
-            vals.update(pc.unique(col.combine_chunks().drop_null()).to_pylist())
-            if len(vals) > max_distinct:
-                return None
-    return sorted(vals), has_null
+#: a fold's chunk files are read driver-side (`ChunkedState.fold_columns`)
+#: only up to this many rows; a larger batch takes the Spark paths
+KEYSET_MAX_ROWS = 200_000
+#: a key set becomes a literal IN list only up to this many distinct
+#: values; a wider one filters by a semi/anti join against its key frame
+KEYSET_MAX_DISTINCT = 8192
 
 
 def key_values_filter(col_name: str, vals: list, has_null: bool):
@@ -227,22 +137,6 @@ def key_values_filter(col_name: str, vals: list, has_null: bool):
     return F.expr(
         f"(CASE WHEN {qn} IS NULL THEN {str(has_null).lower()} ELSE {in_expr} END)"
     )
-
-
-def buckets_of_values(vals: list, has_null: bool, n_buckets: int) -> list[int]:
-    """Touched buckets of a single-key value list — the driver-side crc32
-    identical to `key_bucket_expr` (str-cast int / utf-8 string; concat_ws
-    skips NULL, so a null key hashes the empty string)."""
-    import zlib
-
-    buckets = {
-        zlib.crc32((str(int(v)) if not isinstance(v, str) else v).encode())
-        % n_buckets
-        for v in vals
-    }
-    if has_null:
-        buckets.add(zlib.crc32(b"") % n_buckets)
-    return sorted(buckets)
 
 
 #: open `non_strict_analysis` spans per session: [count, the ANSI value
@@ -307,6 +201,20 @@ def bump_chunk_base(changelog_dir: str, delta: int) -> None:
     os.replace(tmp, path)
 
 
+def write_changelog(changelog_dir: str, cid: int, chunk: DataFrame) -> None:
+    """Write changelog chunk `c{cid}` (at most 4 files; overwrite, so a
+    redelivered batch replaces its own chunk) and its commit timestamp
+    marker (reference epoch commit_ts): cursors positioned with SINCE
+    <unix_ms> bound against it. The underscore prefix hides the marker
+    from Spark's parquet reader."""
+    import time as _time
+
+    d = os.path.join(changelog_dir, f"c{cid}")
+    chunk.coalesce(4).write.mode("overwrite").parquet(d)
+    with open(os.path.join(d, "_COMMIT_TS_MS"), "w") as f:
+        f.write(str(int(_time.time() * 1000)))
+
+
 def with_ops(df: DataFrame, op: int = 1) -> DataFrame:
     """Tag a DataFrame as a changelog chunk (op=+1 insert, -1 delete)."""
     return df.withColumn(OP_COL, F.lit(op))
@@ -315,9 +223,8 @@ def with_ops(df: DataFrame, op: int = 1) -> DataFrame:
 def key_bucket_expr(keys: list[str], n_buckets: int):
     """Bucket = crc32(concat_ws(keys)) % n. crc32 (not Murmur3) so the
     SAME bucket is computable driver-side in Python (zlib.crc32) from a
-    batch's already-written chunk files — see
-    `_BucketedMvTable.bucket_expr` / `buckets_from_chunks`, which must
-    agree row-for-row with this expression."""
+    batch's already-written chunk files — see `KeySet`, whose buckets
+    must agree row-for-row with this expression."""
     joined = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
     return F.pmod(F.crc32(joined.cast("binary")), F.lit(n_buckets))
 
@@ -343,80 +250,6 @@ def nullsafe_cond(a: DataFrame, b: DataFrame, cols_a: list[str], cols_b: list[st
         c = a[ca].eqNullSafe(b[cb])
         cond = c if cond is None else (cond & c)
     return cond
-
-
-def buckets_from_chunks(state: "ChunkedState", keys: list[str], n_buckets: int) -> list[int] | None:
-    """Touched buckets of the batch `state` last folded, computed
-    driver-side from the just-written local chunk files (pyarrow column
-    read + zlib.crc32 — no Spark job). Must agree row-for-row with
-    `_BucketedMvTable.bucket_expr` (crc32 over \\x1f-joined keys,
-    concat_ws null-skipping), so it only handles int/string keys;
-    anything else returns None → caller falls back to a Spark collect."""
-    import glob as _glob
-    import zlib
-
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    seq = state._seq - 1
-    chunk_dirs = [
-        os.path.join(state.values_dir, f"b{seq}"),
-        os.path.join(state.tombs_dir, f"b{seq}"),
-    ]
-    # bucketed chunk layout: the __bucket=N dir names ARE the touched
-    # buckets — no column reads, no hashing (requires the state to be
-    # bucketed by the same keys/modulus this caller asks about)
-    if state.bucket_cols == keys and state.n_buckets == n_buckets:
-        found: set[int] = set()
-        flat = False
-        for d in chunk_dirs:
-            if not os.path.isdir(d):
-                continue
-            subs = [s for s in os.listdir(d) if s.startswith("__bucket=")]
-            if subs:
-                found.update(int(s.split("=", 1)[1]) for s in subs)
-            elif any(
-                pq.ParquetFile(f).metadata.num_rows > 0
-                for f in _glob.glob(os.path.join(d, "*.parquet"))
-            ):
-                flat = True  # non-empty unbucketed chunk → hash its keys
-        if not flat:
-            return sorted(found)
-    paths = []
-    for d in chunk_dirs:
-        paths += _glob.glob(os.path.join(d, "*.parquet"))
-        paths += _glob.glob(os.path.join(d, "*", "*.parquet"))
-    frames = []
-    for f in paths:
-        pf = pq.ParquetFile(f)
-        if pf.metadata.num_rows == 0:
-            continue
-        names = set(pf.schema_arrow.names)
-        if any(k not in names for k in keys):
-            return None
-        frames.append(pf.read(columns=keys).to_pandas())
-    if not frames:
-        return []
-    # dedup BEFORE hashing: the python crc32 loop runs per distinct key,
-    # not per batch row (150k rows / 1.5k keys → 100× less work)
-    df = pd.concat(frames, ignore_index=True).drop_duplicates()
-    encoded = []
-    for k in keys:
-        s = df[k]
-        if s.dtype.kind in "iu":
-            col = s.map(lambda v: str(int(v)).encode())
-        elif s.dtype == object:
-            if not all(isinstance(v, str) or v is None for v in s[:100]):
-                return None
-            col = s.map(lambda v: None if v is None else v.encode())
-        else:
-            return None  # float/timestamp/bool formatting may diverge
-        encoded.append(col)
-    buckets = set()
-    for parts in zip(*encoded):
-        joined = b"\x1f".join(p for p in parts if p is not None)
-        buckets.add(zlib.crc32(joined) % n_buckets)
-    return sorted(buckets)
 
 
 class _VersionedTable:
@@ -450,17 +283,14 @@ class _VersionedTable:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, f"v{self._version}"))
 
-    def write(self, df: DataFrame, partition_by: list[str] | None = None, n_files: int = 8):
-        """Write the next version. `n_files` caps output files — state
-        tables are re-read every batch, so many tiny files cost more in
-        listing/open overhead than they buy in parallelism (at cluster
-        scale you'd size this to state-bytes / 128 MB instead)."""
+    def write(self, df: DataFrame):
+        """Write the next version as at most 8 files — state tables are
+        re-read every batch, so many tiny files cost more in listing/open
+        overhead than they buy in parallelism (at cluster scale you'd
+        size this to state-bytes / 128 MB instead)."""
         nxt = self._version + 1
         out = os.path.join(self.path, f"v{nxt}")
-        w = df.coalesce(n_files).write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(out)
+        df.coalesce(8).write.mode("overwrite").parquet(out)
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(nxt))
@@ -542,7 +372,7 @@ class _BucketedMvTable:
 
     def bucket_expr(self):
         """See `key_bucket_expr`: crc32 so the same bucket is computable
-        driver-side with zero extra Spark jobs (_touched_buckets_fast).
+        driver-side with zero extra Spark jobs (`KeySet.buckets`).
         Collisions are harmless (buckets only co-locate); what matters is
         that the two computations agree per key. Cached — the Column is
         an immutable unresolved-attribute tree, valid on any frame that
@@ -682,35 +512,41 @@ class _BucketedMvTable:
         self._manifest["epoch"] = epoch
         self._flip_manifest()
 
-    def overwrite_and_diff(
-        self,
-        content: DataFrame,
-        touched: list[int] | None,
-        prev: DataFrame | None,
-        semi,
-        materialize: bool,
-        log=None,
-    ) -> DataFrame:
-        """Write `content` as the next epoch like `overwrite_buckets`
-        (`prev` = the touched buckets' prior rows, None on first
-        materialization) and return the write's changelog, read back from
-        files instead of re-running `content`'s plan: −1 the affected rows
-        (`semi`) of the prior epochs, which the write keeps until the next
-        one, +1 those of the epoch just written. `log(changelog)` runs
-        before the manifest flips, so on a crash in between a redelivered
-        batch overwrites the same chunk. Under a literal key set the
-        changelog is two filtered file scans; `materialize` checkpoints it
-        when the key set is a frame that may derive from an upstream's
-        plan, or plans would compound down an MV chain — exponential plan
-        text (driver-heap OOM in the listener)."""
+    def splice(
+        self, recomputed: DataFrame, keyset: "KeySet", changelog: bool = False, log=None
+    ) -> DataFrame | None:
+        """Replace the rows of `keyset`'s keys by `recomputed`: the touched
+        buckets' prior rows outside the key set ∪ `recomputed` become the
+        next epoch (`recomputed` alone on first materialization, which
+        writes every bucket). With `changelog`, return the write's
+        changelog, read back from files instead of re-running the
+        recompute: −1 the key set's rows of the prior epochs, which the
+        write keeps until the next one, +1 those of the epoch just
+        written. `log(changelog)` runs before the manifest flips, so on a
+        crash in between a redelivered batch overwrites the same chunk.
+        A literal key set makes the changelog two filtered file scans; a
+        key frame may derive from an upstream's plan, so the changelog is
+        checkpointed, or plans would compound down an MV chain —
+        exponential plan text (driver-heap OOM in the listener)."""
+        touched = prev = None
+        content = recomputed
+        if self.exists():
+            touched = keyset.buckets
+            if touched is None:
+                touched = self.touched_buckets(keyset.frame)
+            prev = self.read_buckets(touched)
+            content = keyset.anti(prev, self.keys).unionByName(recomputed)
+        if not changelog:
+            self.overwrite_buckets(content, touched)
+            return None
         out = None
 
         def before_flip(new_rows: DataFrame) -> None:
             nonlocal out
-            out = with_ops(semi(new_rows), 1)
+            out = with_ops(keyset.semi(new_rows, self.keys), 1)
             if prev is not None:
-                out = with_ops(semi(prev), -1).unionByName(out)
-            if materialize:
+                out = with_ops(keyset.semi(prev, self.keys), -1).unionByName(out)
+            if keyset.vals is None:
                 out = out.localCheckpoint(eager=True)
             if log is not None:
                 log(out)
@@ -1089,12 +925,19 @@ class ChunkedState:
         if self._has_tombs:
             tpaths = self._bounded_chunk_dirs(self.tombs_dir, min_seq, max_seq)
             if tpaths:
-                t = self._read_paths(tpaths, self.tombs_dir)
-                cond = v["__seq"] < t["__del_seq"]
-                for c in self.row_ids:
-                    cond = cond & (v[c].eqNullSafe(t[c]))
-                v = v.join(t, on=cond, how="left_anti")
+                v = self._unmasked(v, self._read_paths(tpaths, self.tombs_dir))
         return v.drop("__seq")
+
+    def _unmasked(self, v: DataFrame, t: DataFrame) -> DataFrame:
+        """Chunk rows `v` minus those a tombstone in `t` deletes: a delete
+        in batch n masks inserts from batches < n. Row ids match
+        null-safe — composite row ids may carry NULL components (e.g. the
+        null-padded side of an outer-join changelog feeding a downstream
+        MV) and must still be deletable."""
+        cond = v["__seq"] < t["__del_seq"]
+        for c in self.row_ids:
+            cond = cond & (v[c].eqNullSafe(t[c]))
+        return v.join(t, on=cond, how="left_anti")
 
     def read(self, buckets: list[int] | None = None) -> DataFrame:
         """Current state (chunks minus tombstones). With `buckets`, the
@@ -1121,23 +964,87 @@ class ChunkedState:
                 tpaths = self._pruned_paths(self.tombs_dir, buckets)
                 self.last_read_paths = vpaths + tpaths
                 if tpaths:
-                    t = self._read_paths(tpaths, self.tombs_dir)
-                    cond = v["__seq"] < t["__del_seq"]
-                    for c in self.row_ids:
-                        cond = cond & (v[c].eqNullSafe(t[c]))
-                    v = v.join(t, on=cond, how="left_anti")
+                    v = self._unmasked(v, self._read_paths(tpaths, self.tombs_dir))
             return v.drop("__seq")
         v = self._read_dir(self.values_dir)
         if self._has_tombs:
-            t = self._read_dir(self.tombs_dir)
-            cond = v["__seq"] < t["__del_seq"]
-            for c in self.row_ids:
-                # null-safe: composite row ids may carry NULL components
-                # (e.g. the null-padded side of an outer-join changelog
-                # feeding a downstream MV) and must still be deletable
-                cond = cond & (v[c].eqNullSafe(t[c]))
-            v = v.join(t, on=cond, how="left_anti")
+            v = self._unmasked(v, self._read_dir(self.tombs_dir))
         return v.drop("__seq")
+
+    def fold_columns(self, cols: list[str]):
+        """`cols` of the last fold's rows — its value chunk and its
+        tombstone chunk — as a `pyarrow.Table`, read driver-side from the
+        just-written local files: no Spark job, and the only driver-side
+        read of `last_fold`. None on a replay (no fresh fold), when a
+        chunk lacks one of the columns, or past KEYSET_MAX_ROWS rows."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        lf = self.last_fold
+        if lf is None or lf["v_rows"] + lf["t_rows"] > KEYSET_MAX_ROWS:
+            return None
+        tabs = []
+        for path, rows in ((lf["values"], lf["v_rows"]), (lf["tombs"], lf["t_rows"])):
+            if not path or not rows:
+                continue
+            for f in _chunk_files(path):
+                pf = pq.ParquetFile(f)
+                if pf.metadata.num_rows == 0:
+                    continue
+                if not set(cols) <= set(pf.schema_arrow.names):
+                    return None
+                tabs.append(pf.read(columns=cols))
+        if not tabs:
+            return pa.table({c: pa.array([], pa.null()) for c in cols})
+        # the two chunks may differ in nullability (a literal column is
+        # non-null on one side only); promotion unifies that
+        return pa.concat_tables(tabs, promote_options="default")
+
+    def fold_frame(self, cols: list[str]) -> DataFrame | None:
+        """`cols` of the last fold's rows as a Spark frame over its chunk
+        files (explicit footer schema — no schema-inference job): the
+        Spark-side twin of `fold_columns`, for batches the driver should
+        not hold. None on a replay, an empty fold, or a missing column."""
+        lf = self.last_fold
+        if lf is None:
+            return None
+        parts = []
+        for path, rows in ((lf["values"], lf["v_rows"]), (lf["tombs"], lf["t_rows"])):
+            if path and rows:
+                schema = _parquet_spark_schema(path)
+                if schema is None or not set(cols) <= set(schema.names):
+                    return None
+                parts.append(self.spark.read.schema(schema).parquet(path).select(*cols))
+        if not parts:
+            return None
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def compact_on_cadence(
+        self,
+        every: int | None,
+        folded: bool,
+        keyset: "KeySet | None" = None,
+        changelog_dir: str | None = None,
+    ) -> None:
+        """Compact when a fresh fold lands on the cadence seq (every N
+        folded batches; None = never). Amortizes the O(state) rewrite over
+        N O(batch) folds — the schedule trade-off of the reference's
+        Hummock compaction / Delta OPTIMIZE cadence — and lands the
+        bucketed base layer pruned reads depend on. A skipped replay never
+        compacts. `keyset` is pinned first (compaction GCs the chunk files
+        its lazy frame reads); `changelog_dir`'s chunk base absorbs the
+        seq reset, so changelog chunk ids stay monotonic."""
+        if not (folded and every and self._seq % every == 0):
+            return
+        if keyset is not None:
+            keyset.pin()
+        pre = self._seq
+        self.compact()
+        if changelog_dir is not None:
+            bump_chunk_base(changelog_dir, pre - self._seq)
 
     def compact(self, transform=None) -> None:
         """Rewrite chunks minus tombstones into one generation and drop
@@ -1208,10 +1115,189 @@ class ChunkedState:
         os.replace(tmp, self._seq_times_path())
 
 
+class KeySet:
+    """The keys one fold touched — the single place a maintained view
+    (group agg, stream join, over-window) decides which groups a batch
+    affects and how to filter by them. Built once per folded side, from
+    the fold's just-written chunk files, so no Spark job re-derives
+    what the fold already wrote:
+
+    - `vals` / `has_null`: the distinct non-null values and whether a
+      NULL key occurred, for a single int or string key of at most
+      KEYSET_MAX_DISTINCT values — filters become one null-safe IN
+      predicate instead of semi/anti joins with broadcast-build jobs;
+    - `buckets`: crc32 over the distinct key tuples, equal to
+      `key_bucket_expr` — prunes the state read and the MV splice;
+    - `frame`: the key tuples as a DataFrame, built lazily and only when
+      `vals` is None — a read of the chunk files, or the batch plan on a
+      replay or for keys derived through `key_of`;
+    - `empty`: the fold wrote no row (from the footers); None when only a
+      probe of the batch plan can tell (`is_empty`).
+
+    `names` are the set's own column names (the view's splice keys); the
+    filters map them onto any frame's `cols` positionally."""
+
+    def __init__(self, names: list[str], make_frame=None, empty: bool | None = False):
+        self.names = list(names)
+        self.vals: list | None = None
+        self.has_null = False
+        self.buckets: list[int] | None = None
+        self.empty = empty
+        self._make_frame = make_frame
+        self._frame: DataFrame | None = None
+        #: the frame reads the state's chunk files (pin before compaction)
+        self._chunked = False
+        self._conds: dict = {}
+
+    @classmethod
+    def of_fold(
+        cls,
+        state: ChunkedState,
+        keys: list[str],
+        plan=None,
+        names: list[str] | None = None,
+        derived: bool = False,
+    ) -> "KeySet":
+        """Key set of `state`'s last fold over its columns `keys`,
+        renamed to `names`. `plan()` returns the batch's key tuples (named
+        `keys`) when the chunk files cannot: on a replay, or when the keys
+        are `derived` from the input columns rather than stored in them."""
+        import zlib
+
+        import pyarrow as pa
+
+        names = list(names or keys)
+
+        def from_plan():
+            df = plan()
+            return df.select(*[F.col(k).alias(n) for k, n in zip(keys, names)])
+
+        lf = state.last_fold
+        if lf is None:
+            return cls(names, from_plan, empty=None)
+        ks = cls(names, from_plan, empty=lf["v_rows"] + lf["t_rows"] == 0)
+        if ks.empty:
+            ks.vals, ks.buckets = [], []
+            return ks
+        if derived:
+            return ks
+        ks._chunked = True
+
+        def from_chunks():
+            df = state.fold_frame(keys)
+            if df is None:
+                return from_plan()
+            if names != list(keys):
+                df = df.select(*[F.col(k).alias(n) for k, n in zip(keys, names)])
+            return df
+
+        ks._make_frame = from_chunks
+        tab = state.fold_columns(keys)
+        if tab is None or not all(
+            pa.types.is_integer(t) or pa.types.is_string(t) or pa.types.is_large_string(t)
+            for t in tab.schema.types
+        ):
+            return ks
+        rows = tab.group_by(list(keys), use_threads=False).aggregate([])
+        tuples = list(zip(*(rows.column(k).to_pylist() for k in keys)))
+        ks.buckets = sorted(
+            {
+                zlib.crc32(
+                    b"\x1f".join(str(v).encode() for v in t if v is not None)
+                )
+                % state.n_buckets
+                for t in tuples
+            }
+        )
+        if len(keys) == 1:
+            vals = sorted(t[0] for t in tuples if t[0] is not None)
+            if len(vals) <= KEYSET_MAX_DISTINCT:
+                ks.vals, ks.has_null = vals, len(vals) < len(tuples)
+        return ks
+
+    @property
+    def frame(self) -> DataFrame:
+        if self._frame is None:
+            self._frame = self._make_frame()
+        return self._frame
+
+    def union(self, other: "KeySet") -> "KeySet":
+        """Keys touched by either set (the two sides of a join) — literal
+        when both are and their values share a type (int or string)."""
+        if self.empty is False or other.empty is False:
+            empty = False
+        else:
+            empty = None if None in (self.empty, other.empty) else True
+        if self.empty or other.empty:
+            src = other if self.empty else self
+            out = KeySet(self.names, lambda: src.frame, empty)
+        else:
+            out = KeySet(
+                self.names,
+                lambda: self.frame.unionByName(other.frame).distinct(),
+                empty,
+            )
+        out._chunked = self._chunked or other._chunked
+        if self.buckets is not None and other.buckets is not None:
+            out.buckets = sorted(set(self.buckets) | set(other.buckets))
+        if self.vals is not None and other.vals is not None:
+            vals = set(self.vals) | set(other.vals)
+            types = {type(v) for v in vals}
+            if types <= {int} or types <= {str}:
+                out.vals = sorted(vals)
+                out.has_null = self.has_null or other.has_null
+        return out
+
+    def is_empty(self) -> bool:
+        """Whether the fold touched no key: known from the footers, else
+        one take(1) probe of the batch plan."""
+        if self.empty is None:
+            self.empty = not self.frame.take(1)
+        return self.empty
+
+    def pin(self) -> None:
+        """Checkpoint a frame that reads the state's chunk files — run
+        before compaction, which GCs them. A literal set holds its keys
+        driver-side; nothing to pin."""
+        if self._chunked and self.vals is None:
+            self._frame = self.frame.localCheckpoint(eager=True)
+            self._chunked = False
+
+    def _cond(self, cols: list[str]):
+        """(is-a-key, not-a-key) Columns over `cols`, built once per
+        column set and reused on every frame (each Column built through
+        py4j costs a round trip)."""
+        c = self._conds.get(tuple(cols))
+        if c is None:
+            if self.empty:
+                cond = F.lit(False)
+            else:
+                cond = key_values_filter(cols[0], self.vals, self.has_null)
+            c = self._conds[tuple(cols)] = (cond, ~cond)
+        return c
+
+    def semi(self, df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+        """Rows of `df` whose `cols` (default: the set's names) are a key
+        of the set, NULL-safe."""
+        cols = cols or self.names
+        if self.vals is not None:
+            return df.filter(self._cond(cols)[0])
+        f = self.frame
+        return df.join(f, nullsafe_cond(df, f, cols, self.names), "left_semi")
+
+    def anti(self, df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+        """Rows of `df` whose `cols` are not a key of the set, NULL-safe."""
+        cols = cols or self.names
+        if self.vals is not None:
+            return df.filter(self._cond(cols)[1])
+        f = self.frame
+        return df.join(f, nullsafe_cond(df, f, cols, self.names), "left_anti")
+
+
 class _RetractableView:
     """Shared per-batch maintenance loop (the reference's HashAgg +
     MaterializedInput pattern): fold the chunk into ChunkedState, then
-    recompute ONLY the partitions/groups the batch touched and splice
+    recompute ONLY the groups the batch touched (its `KeySet`) and splice
     them into the MV (untouched ∪ recomputed)."""
 
     #: compact the chunked state every N folded batches (None = never).
@@ -1257,29 +1343,6 @@ class _RetractableView:
 
     def _recompute(self, rows: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
-
-    def _touched_buckets_fast(self) -> list[int] | None:
-        """Touched buckets from the just-folded chunk files — zero Spark
-        jobs; identity keys only (derived keys need the annotate expr)."""
-        if self.key_of is not None:
-            return None
-        return buckets_from_chunks(self.state, self.keys, self.mv.n_buckets)
-
-    def _chunk_affected_values(self, lf: dict | None) -> tuple[list, bool] | None:
-        """The batch's affected KEY VALUES (single identity key only),
-        read driver-side from the just-written chunk files — the literal
-        form of `_chunk_affected`. When available, the splice replaces
-        its affected-keys semi/anti joins with an `isin` predicate: two
-        fewer join subtrees and no broadcast-build Spark jobs per fold.
-        None → fall back to the DataFrame/join path (replay, composite
-        or derived keys, huge batch, non-int/string dtype)."""
-        if self.key_of is not None or len(self.keys) != 1 or lf is None:
-            return None
-        return chunk_key_values(self.state, self.keys[0])
-
-    def _buckets_of_values(self, vals: list, has_null: bool) -> list[int]:
-        """See `buckets_of_values` (module level, shared with the joins)."""
-        return buckets_of_values(vals, has_null, self.mv.n_buckets)
 
     def apply_batch(
         self,
@@ -1330,85 +1393,33 @@ class _RetractableView:
             tomb_extra_cols=self.keys if self.key_of is None else None,
             batch_ns=batch_ns,
         )
-        # O(touched buckets) on BOTH sides of the recompute: the bucket
-        # set comes from the batch's just-written local chunk files when
-        # possible (zero extra jobs), else a tiny collect; the state
-        # scan AND the MV splice then prune to exactly those buckets.
-        # Computed BEFORE compaction — the compacted generation's single
-        # chunk spans every bucket, the batch itself does not. Only an
-        # actually-folded batch compacts (a skipped replay must not
-        # re-run the O(state) rewrite).
-        lf = self.state.last_fold if did_fold else None
-        affected_vals = self._chunk_affected_values(lf)
-        if affected_vals is not None:
-            # one driver-side chunk read serves both: the literal key set
-            # AND the touched buckets derived from it (no second read)
-            touched = self._buckets_of_values(*affected_vals)
-        else:
-            touched = self._touched_buckets_fast()
-        will_compact = bool(
-            did_fold and self.compact_every and self.state._seq % self.compact_every == 0
+        # The batch's key set, read once from its just-written chunk
+        # files (zero Spark jobs when the keys fit driver-side): its
+        # buckets prune the state scan AND the MV splice, and its filters
+        # pick the affected groups. Built BEFORE compaction — the
+        # compacted generation's single chunk spans every bucket, the
+        # batch itself does not.
+        annotate = self.key_of or (lambda d: d)
+        keyset = KeySet.of_fold(
+            self.state,
+            self.keys,
+            plan=lambda: annotate(batch).select(*self.keys).distinct(),
+            derived=self.key_of is not None,
         )
-
-        def compact_now():
-            pre = self.state._seq
-            self.state.compact()
-            # keep changelog chunk ids monotonic across the seq reset
-            bump_chunk_base(self.changelog_dir, pre - self.state._seq)
-
-        if lf is not None and self.mv.exists() and lf["v_rows"] + lf["t_rows"] == 0:
+        # the cadence runs on empty batches too — an empty batch landing
+        # on a cadence seq must not defer the O(state) rewrite
+        self.state.compact_on_cadence(
+            self.compact_every, did_fold, keyset, self.changelog_dir
+        )
+        if self.mv.exists() and keyset.is_empty():
             # empty batch (e.g. an upstream pushed-down filter dropped
             # everything): the state fold is committed, and recompute /
             # splice / downstream forward are no-ops. Emptiness comes
-            # from the just-written chunk footers — zero Spark jobs
-            # (previously a take(1) job re-evaluating the batch plan).
-            # The compaction cadence still runs — an empty batch landing
-            # on a cadence seq must not defer the O(state) rewrite.
-            # (The FIRST apply must still run the splice to materialize
-            # the empty MV + schema.)
-            if will_compact:
-                compact_now()
+            # from the just-written chunk footers — zero Spark jobs. (The
+            # FIRST apply must still run the splice to materialize the
+            # empty MV + schema.)
             return
-        # Affected keys from the batch's just-written chunk files (tiny
-        # local parquet) instead of re-evaluating the upstream batch plan:
-        # the splice references `affected` in up to three join branches,
-        # each of which would otherwise re-run the whole upstream subtree
-        # (guide §2.4 — don't recompute what is already materialized).
-        # When the key VALUES fit driver-side (affected_vals), even the
-        # chunk-file read is skipped: the splice filters by a literal
-        # InSet instead of joining (no broadcast-build jobs at all).
-        affected = None if affected_vals is not None else self._chunk_affected(lf)
-        if affected is not None and will_compact:
-            # compaction GCs the old generation's chunk files the lazy
-            # plan points at — pin the (tiny) key set first
-            affected = affected.localCheckpoint(eager=True)
-        if will_compact:
-            compact_now()
-
-        if affected is None and affected_vals is None:
-            annotate = self.key_of or (lambda d: d)
-            affected = annotate(batch).select(*self.keys).distinct()
-            if self.mv.exists() and not affected.take(1):
-                return
-        self._splice(
-            affected,
-            touched,
-            batch_id=batch_id,
-            batch_ns=batch_ns,
-            affected_vals=affected_vals,
-        )
-
-    def _chunk_affected(self, lf: dict | None) -> DataFrame | None:
-        """The batch's affected key tuples, read from the just-written
-        state chunk files (values chunk carries every input column; the
-        tombstone chunk carries the keys via tomb_extra_cols). None when
-        the fold was skipped (replay), keys are derived (key_of), or a
-        chunk lacks a key column — callers fall back to the batch plan.
-        No distinct(): every consumer is a semi/anti join or a distinct
-        aggregation, so duplicate key rows are harmless."""
-        if self.key_of is not None:
-            return None
-        return chunk_key_frame(self.spark, lf, self.keys)
+        self._splice(keyset, batch_id=batch_id, batch_ns=batch_ns)
 
     def retouch(self, affected: DataFrame) -> None:
         """Recompute + splice the given key tuples from CURRENT state
@@ -1419,56 +1430,25 @@ class _RetractableView:
         self.state.fold(
             self.state.read().limit(0), self.state.read().limit(0)
         )
-        self._splice(affected, None)
+        self._splice(KeySet(self.keys, lambda: affected))
 
     def _splice(
         self,
-        affected: DataFrame | None,
-        touched: list[int] | None,
+        keyset: KeySet,
         batch_id: int | None = None,
         batch_ns: str | None = None,
-        affected_vals: tuple[list, bool] | None = None,
     ) -> None:
-        """Recompute the affected groups from state and write the touched
-        buckets' new content (untouched groups ∪ recomputed) as one new
-        MV epoch — the only job that runs the recompute. When a
-        downstream view or a subscription wants this batch's changelog,
-        it is read back from files, not recomputed: −1 rows are the
-        affected groups of the prior epochs, +1 rows those of the epoch
-        just written. The changelog is logged before the manifest flips
-        and forwarded after it."""
+        """Recompute the key set's groups from state and splice them into
+        the MV (`_BucketedMvTable.splice`) — the only job that runs the
+        recompute. A downstream view or a subscription gets the changelog
+        the splice reads back from files; it is logged before the
+        manifest flips and forwarded after it."""
         annotate = self.key_of or (lambda d: d)
-        st = annotate(self.state.read(buckets=touched))
-        if affected_vals is not None:
-            # literal key-set pushdown: the semi/anti joins (and their
-            # broadcast-build jobs) become InSet filters — the key set
-            # was already read driver-side from the batch's chunk files
-            vals, has_null = affected_vals
-            cond = key_values_filter(self.keys[0], vals, has_null)
-            neg = ~cond  # negated once per fold, not per frame (§B)
-            semi = lambda d: d.filter(cond)  # noqa: E731
-            anti = lambda d: d.filter(neg)  # noqa: E731
-        else:
-            semi = lambda d: d.join(  # noqa: E731
-                affected, nullsafe_cond(d, affected, self.keys), "left_semi"
-            )
-            anti = lambda d: d.join(  # noqa: E731
-                affected, nullsafe_cond(d, affected, self.keys), "left_anti"
-            )
-        recomputed = self._recompute(semi(st))
-        prev_t, content = None, recomputed
-        if self.mv.exists():
-            if touched is None:
-                touched = self.mv.touched_buckets(affected)
-            prev_t = self.mv.read_buckets(touched)
-            content = anti(prev_t).unionByName(recomputed)
-        else:
-            touched = None  # first materialization: every bucket
-        if not (self.downstream or self.emit_changelog):
-            self.mv.overwrite_buckets(content, touched)
-            return
-        out_changelog = self.mv.overwrite_and_diff(
-            content, touched, prev_t, semi, materialize=affected_vals is None,
+        st = annotate(self.state.read(buckets=keyset.buckets))
+        out_changelog = self.mv.splice(
+            self._recompute(keyset.semi(st)),
+            keyset,
+            changelog=bool(self.downstream or self.emit_changelog),
             log=self._log_changelog if self.emit_changelog else None,
         )
         # batch_id rides along so the whole MV chain shares one
@@ -1481,16 +1461,11 @@ class _RetractableView:
             d.apply_batch(out_changelog, batch_id=batch_id, batch_ns=batch_ns)
 
     def _log_changelog(self, chunk: DataFrame) -> None:
-        cid = chunk_base(self.changelog_dir) + self.state._seq - 1
-        d = os.path.join(self.changelog_dir, f"c{cid}")
-        chunk.coalesce(4).write.mode("overwrite").parquet(d)
-        # commit timestamp marker (reference epoch commit_ts): cursors
-        # positioned with SINCE <unix_ms> bound against it. Underscore
-        # prefix → invisible to Spark's parquet reader.
-        import time as _time
-
-        with open(os.path.join(d, "_COMMIT_TS_MS"), "w") as f:
-            f.write(str(int(_time.time() * 1000)))
+        write_changelog(
+            self.changelog_dir,
+            chunk_base(self.changelog_dir) + self.state._seq - 1,
+            chunk,
+        )
 
     def result(self) -> DataFrame:
         return self.mv.read()
@@ -2075,9 +2050,7 @@ class EowcAggMv:
                 k = 0
                 while os.path.isdir(os.path.join(self.changelog_dir, f"c{k}")):
                     k += 1
-                with_ops(out, 1).coalesce(2).write.mode("overwrite").parquet(
-                    os.path.join(self.changelog_dir, f"c{k}")
-                )
+                write_changelog(self.changelog_dir, k, with_ops(out, 1).coalesce(2))
             out_dir = os.path.join(self.out_path, f"e{self._emit_n}")
             self._emit_n += 1
             if self._out_schema is None:

@@ -44,14 +44,17 @@ from pyspark.sql import functions as F
 
 from risingwave_spark.streaming.mv import (
     ChunkedState,
+    KeySet,
     OP_COL,
     _BucketedMvTable,
     _next_seq_index,
     _parquet_rows,
     _parquet_ts_minmax,
     _statically_empty,
-    buckets_from_chunks,
+    chunk_base,
     nullsafe_cond,
+    with_ops,
+    write_changelog,
 )
 
 _KINDS = {
@@ -220,60 +223,29 @@ class MaterializedOverWindowDelta:
         self.changelog_dir = os.path.join(state_dir, "changelog")
         self.emit_changelog = False
 
-    def _chunk_boundary_src(self, lf: dict | None) -> DataFrame | None:
-        """(keys + order cols) of the batch's rows, read from the
-        just-written state chunk files — None when the fold was skipped
-        (replay) or a chunk lacks one of the columns (fall back to the
-        batch plan)."""
-        from risingwave_spark.streaming.mv import chunk_key_frame
-
-        need = list(dict.fromkeys([*self.keys, *self.order_cols]))
-        return chunk_key_frame(self.spark, lf, need)
-
     def _chunk_boundaries_local(
-        self, lf: dict | None, kcols: list[str], bcols: list[str],
-        max_rows: int = 200_000,
+        self, kcols: list[str], bcols: list[str]
     ) -> DataFrame | None:
         """Per-partition frame boundaries (earliest touched order
-        position) computed DRIVER-SIDE from the batch's just-written
-        chunk files — a pandas lexicographic-min per key over a pyarrow
-        column read. Returns a LocalRelation DataFrame shaped exactly
-        like the Spark-side boundary agg (kcols + bcols + __aff=1): the
-        per-batch boundary agg job AND its eager localCheckpoint job
-        disappear, and the downstream boundary joins broadcast a literal
-        relation (no build job). None falls back to the Spark agg:
-        replay, oversized batch (max_rows bounds driver work at scale),
-        missing columns, unsupported dtypes (only int/string keys and
-        int/string/timestamp order cols round-trip exactly),
-        any NULL key/order value (Spark's struct-min null ordering is
-        not reproduced), or key/order name overlap."""
-        if lf is None or lf["v_rows"] + lf["t_rows"] > max_rows:
-            return None
+        position) computed DRIVER-SIDE from the last fold's chunk columns
+        (`ChunkedState.fold_columns`) — a pandas lexicographic-min per
+        key. Returns a LocalRelation DataFrame shaped exactly like the
+        Spark-side boundary agg (kcols + bcols + __aff=1): the per-batch
+        boundary agg job AND its eager localCheckpoint job disappear, and
+        the downstream boundary joins broadcast a literal relation (no
+        build job). None falls back to the Spark agg: replay, oversized
+        batch, missing columns, unsupported dtypes (only int/string keys
+        and int/string/timestamp order cols round-trip exactly), any NULL
+        key/order value (Spark's struct-min null ordering is not
+        reproduced), or key/order name overlap."""
         if set(self.keys) & set(self.order_cols):
             return None
-        import glob as _glob
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        need = [*self.keys, *self.order_cols]
         try:
-            tabs = []
-            for path, rows in ((lf["values"], lf["v_rows"]), (lf["tombs"], lf["t_rows"])):
-                if not path or not rows:
-                    continue
-                for f in _glob.glob(os.path.join(path, "*.parquet")) + _glob.glob(
-                    os.path.join(path, "*", "*.parquet")
-                ):
-                    pf = pq.ParquetFile(f)
-                    if pf.metadata.num_rows == 0:
-                        continue
-                    if not set(need) <= set(pf.schema_arrow.names):
-                        return None
-                    tabs.append(pf.read(columns=need))
-            if not tabs:
+            tab = self.state.fold_columns([*self.keys, *self.order_cols])
+            if tab is None or not tab.num_rows:
                 return None
-            tab = pa.concat_tables(tabs)
             for fld in tab.schema:
                 # timestamps: Spark writes LTZ as INT96 (pyarrow: NAIVE
                 # ns) — under the engine's pinned UTC session the naive
@@ -310,19 +282,13 @@ class MaterializedOverWindowDelta:
             return None
 
     def _log_changelog(self, old_rows: DataFrame, new_rows: DataFrame) -> None:
-        from risingwave_spark.streaming.mv import OP_COL, with_ops
-
         def strip(df: DataFrame) -> DataFrame:
             return df.drop(*[c for c in df.columns if c.startswith("__aux_")])
 
-        chunk = with_ops(strip(old_rows), -1).unionByName(
-            with_ops(strip(new_rows), 1)
-        )
-        from risingwave_spark.streaming.mv import chunk_base
-
-        cid = chunk_base(self.changelog_dir) + self.state._seq - 1
-        chunk.coalesce(4).write.mode("overwrite").parquet(
-            os.path.join(self.changelog_dir, f"c{cid}")
+        write_changelog(
+            self.changelog_dir,
+            chunk_base(self.changelog_dir) + self.state._seq - 1,
+            with_ops(strip(old_rows), -1).unionByName(with_ops(strip(new_rows), 1)),
         )
 
     # ------------------------------------------------------------ internals
@@ -553,22 +519,17 @@ class MaterializedOverWindowDelta:
             tomb_extra_cols=list(dict.fromkeys([*self.keys, *self.order_cols])),
             batch_ns=batch_ns,
         )
-        # Boundary source: the batch's just-written chunk files (tiny
-        # local parquet) when available, instead of re-evaluating the
-        # upstream batch plan a second time (guide §2.4). The eager
-        # checkpoint below materializes before any compaction GC.
-        lf = self.state.last_fold if did_fold else None
-        if lf is not None and self.mv.exists() and lf["v_rows"] + lf["t_rows"] == 0:
+        # the batch's touched partitions (`KeySet`: buckets and footer
+        # emptiness from the just-written chunk files, no Spark job)
+        keyset = KeySet.of_fold(self.state, self.keys)
+        if self.mv.exists() and keyset.empty:
             # empty batch: fold committed; the recompute/splice would
             # rewrite an epoch for zero touched partitions — skip it,
             # but keep the compaction cadence (an empty batch on a
             # cadence seq must not defer the O(state) rewrite)
-            if did_fold and self.compact_every and self.state._seq % self.compact_every == 0:
-                from risingwave_spark.streaming.mv import bump_chunk_base
-
-                pre = self.state._seq
-                self.state.compact()
-                bump_chunk_base(self.changelog_dir, pre - self.state._seq)
+            self.state.compact_on_cadence(
+                self.compact_every, did_fold, changelog_dir=self.changelog_dir
+            )
             return
         # per-partition frame boundary: the EARLIEST order position the
         # batch touches (insert or delete) — frames at positions before it
@@ -581,9 +542,12 @@ class MaterializedOverWindowDelta:
         # lineage that trips ambiguous-column detection.
         bcols = [f"__b{i}" for i in range(len(self.order_cols))]
         kcols = [f"__bk{i}" for i in range(len(self.keys))]
-        boundaries = self._chunk_boundaries_local(lf, kcols, bcols)
+        boundaries = self._chunk_boundaries_local(kcols, bcols)
         if boundaries is None:
-            bsrc = self._chunk_boundary_src(lf)
+            # boundary source: the batch's chunk files when available,
+            # instead of re-evaluating the upstream batch plan (§2.4);
+            # the eager checkpoint materializes before any compaction GC
+            bsrc = self.state.fold_frame(list(dict.fromkeys([*self.keys, *self.order_cols])))
             if bsrc is None:
                 bsrc = batch
             boundaries = (
@@ -612,18 +576,13 @@ class MaterializedOverWindowDelta:
             # plan (suffix ⋈ seeds); shared ids would be flagged ambiguous
             return df.select(*[F.col(c).alias(c) for c in df.columns])
 
-        touched = buckets_from_chunks(self.state, self.keys, self.mv.n_buckets)
-        # compaction cadence (see _RetractableView): lands the bucketed
-        # base layer the pruned state read depends on; after the
-        # touched-bucket computation, which must see the batch's chunk.
-        # Skipped replays (did_fold False) never retrigger it.
-        if did_fold and self.compact_every and self.state._seq % self.compact_every == 0:
-            from risingwave_spark.streaming.mv import bump_chunk_base
-
-            pre = self.state._seq
-            self.state.compact()
-            # keep changelog chunk ids monotonic across the seq reset
-            bump_chunk_base(self.changelog_dir, pre - self.state._seq)
+        touched = keyset.buckets
+        # compaction cadence: lands the bucketed base layer the pruned
+        # state read depends on; after the key set and the boundaries
+        # are read, which must see the batch's chunk
+        self.state.compact_on_cadence(
+            self.compact_every, did_fold, changelog_dir=self.changelog_dir
+        )
 
         if self._full:
             # whole-partition kinds (percent_rank/cume_dist/ntile): an

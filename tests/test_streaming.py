@@ -442,15 +442,15 @@ def test_mv_soak_many_batches(spark, events):
         assert got == exp
 
 
-def test_bucket_hash_agrees_spark_vs_python(spark):
-    """_touched_buckets_fast (zlib.crc32 driver-side) must assign every key
-    the SAME bucket as _BucketedMvTable.bucket_expr (Spark crc32) — a
+def test_bucket_hash_agrees_spark_vs_python(spark, tmp_path):
+    """KeySet.buckets (zlib.crc32 driver-side) must assign every key the
+    SAME bucket as _BucketedMvTable.bucket_expr (Spark crc32) — a
     disagreement silently leaves stale MV rows in un-rewritten buckets."""
     import zlib
 
     from pyspark.sql import functions as F
 
-    from risingwave_spark.streaming.mv import _BucketedMvTable
+    from risingwave_spark.streaming.mv import ChunkedState, KeySet, _BucketedMvTable
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "x"), (-5, "héllo"), (2**40, ""), (None, None)],
@@ -467,6 +467,15 @@ def test_bucket_hash_agrees_spark_vs_python(spark):
             parts.append(r.k2.encode())
         expect = zlib.crc32(b"\x1f".join(parts)) % 16
         assert r.b == expect, f"key=({r.k1},{r.k2}): spark={r.b} python={expect}"
+    # the key set of a fold of these rows names exactly the Spark buckets,
+    # for each single key (the literal path) and for the composite key
+    st = ChunkedState(spark, str(tmp_path / "st"), "k1")
+    st.fold(df, df.limit(0))
+    for keys in (["k1"], ["k2"], ["k1", "k2"]):
+        t.keys, t._bucket_col = keys, None
+        spark_buckets = {r.b for r in df.select(t.bucket_expr().alias("b")).collect()}
+        ks = KeySet.of_fold(st, keys)
+        assert ks.buckets == sorted(spark_buckets), (keys, ks.buckets, spark_buckets)
 
 
 def test_retractable_join_types_and_cond(spark, tmp_path):
@@ -1145,16 +1154,17 @@ def test_footer_bounds_equals_agg(spark):
 def test_literal_keyset_fallback_join_path(spark, tmp_path, monkeypatch):
     """VERDICT r12 item 6: the 100 TB fold path is the JOIN fallback (the
     literal-keyset caps exclude wide batches), but sf-scale folds always
-    take the literal path — so force the fallback (cap=0 via the env
-    knob) and pin that (a) the literal derivation declines, (b) the MV
+    take the literal path — so force the fallback (KEYSET_MAX_DISTINCT=0)
+    and pin that (a) the literal derivation declines, (b) the MV
     still converges to the batch aggregate, and (c) the fold costs stay
     in the r12 broadcast-join job shape (chunk write + affected-keys
     broadcast build + splice write per fold — bounded, no per-fold
     O(state) re-derivation jobs)."""
     from risingwave_spark.session import spark_jobs
-    from risingwave_spark.streaming.mv import MaterializedGroupAgg
+    from risingwave_spark.streaming import mv as mv_mod
+    from risingwave_spark.streaming.mv import KeySet, MaterializedGroupAgg
 
-    monkeypatch.setenv("SPARK_GRAFT_KEYSET_MAX_DISTINCT", "0")
+    monkeypatch.setattr(mv_mod, "KEYSET_MAX_DISTINCT", 0)
     df = spark.createDataFrame(
         [(i, i % 5, float(i)) for i in range(200)], "event_id int, k int, value double"
     )
@@ -1162,7 +1172,7 @@ def test_literal_keyset_fallback_join_path(spark, tmp_path, monkeypatch):
     jobs = []
     for i in range(4):
         mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i), 1))
-        assert mv._chunk_affected_values(mv.state.last_fold) is None
+        assert KeySet.of_fold(mv.state, mv.keys).vals is None
         with spark_jobs(spark) as ids:
             mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i).limit(0), 1))
         jobs.append(len(ids))
@@ -1215,7 +1225,7 @@ def test_splice_literal_keys_null_and_string(spark, tmp_path):
     keys on BOTH sides of the splice (a NULL-key MV row must survive as
     'untouched' when the batch carries no null, and must recompute when
     it does) and string keys."""
-    from risingwave_spark.streaming.mv import MaterializedGroupAgg
+    from risingwave_spark.streaming.mv import KeySet, MaterializedGroupAgg
 
     rows = [
         (1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0),
@@ -1225,17 +1235,17 @@ def test_splice_literal_keys_null_and_string(spark, tmp_path):
     mv = MaterializedGroupAgg(spark, str(tmp_path / "mv"), ["k"], "event_id", "value")
     # batch 0: groups a,b + a NULL-key group (two null rows)
     mv.apply_batch(with_ops(df.filter(F.col("event_id") <= 5), 1))
-    vals = mv._chunk_affected_values(mv.state.last_fold)
-    assert vals is not None and vals[1] is True and set(vals[0]) == {"a", "b"}
+    ks = KeySet.of_fold(mv.state, mv.keys)
+    assert ks.vals is not None and ks.has_null is True and set(ks.vals) == {"a", "b"}
     # batch 1: NO null key -> the NULL-key MV row must survive the anti
     # filter (a bare ~isin() would null it out and drop the group)
     mv.apply_batch(with_ops(df.filter(F.col("event_id").isin(6, 7)), 1))
-    vals = mv._chunk_affected_values(mv.state.last_fold)
-    assert vals is not None and vals[1] is False and set(vals[0]) == {"b", "c"}
+    ks = KeySet.of_fold(mv.state, mv.keys)
+    assert ks.vals is not None and ks.has_null is False and set(ks.vals) == {"b", "c"}
     # batch 2: delete one null-key row (tombstone path carries the key)
     mv.apply_batch(with_ops(df.filter(F.col("event_id") == 4), -1))
-    vals = mv._chunk_affected_values(mv.state.last_fold)
-    assert vals is not None and vals[1] is True and vals[0] == []
+    ks = KeySet.of_fold(mv.state, mv.keys)
+    assert ks.vals is not None and ks.has_null is True and ks.vals == []
     survivors = df.filter(F.col("event_id") != 4)
     v = F.col("value")
     expected = survivors.groupBy("k").agg(
@@ -1250,13 +1260,12 @@ def test_splice_literal_keys_null_and_string(spark, tmp_path):
     assert nullsafe(mv.result()) == nullsafe(expected)
 
 
-def test_chunk_key_values_fallbacks(spark, tmp_path):
-    """chunk_key_values declines (-> join fallback) on: no fresh fold,
-    too many distinct keys, unsupported dtype; and the splice falls back
-    to the DataFrame path for composite keys."""
-    from risingwave_spark.streaming.mv import (
-        ChunkedState, MaterializedGroupAgg, chunk_key_values,
-    )
+def test_keyset_literal_fallbacks(spark, tmp_path, monkeypatch):
+    """KeySet.of_fold keeps no literal values (-> join fallback) on: no
+    fresh fold, too many distinct keys, too many rows, unsupported dtype;
+    and the splice falls back to the DataFrame path for composite keys."""
+    from risingwave_spark.streaming import mv as mv_mod
+    from risingwave_spark.streaming.mv import ChunkedState, KeySet, MaterializedGroupAgg
 
     df = spark.createDataFrame(
         [(i, float(i % 7), i * 1.0) for i in range(50)],
@@ -1265,17 +1274,21 @@ def test_chunk_key_values_fallbacks(spark, tmp_path):
     st = ChunkedState(spark, str(tmp_path / "st"), "event_id")
     st.fold(df, df.limit(0))
     # unsupported dtype (double key) -> None
-    assert chunk_key_values(st, "fk") is None
-    # int key works and caps on max_distinct
-    assert chunk_key_values(st, "event_id", max_distinct=10) is None
-    got = chunk_key_values(st, "event_id")
-    assert got is not None and got[1] is False and len(got[0]) == 50
+    assert KeySet.of_fold(st, ["fk"]).vals is None
+    # int key works and caps on KEYSET_MAX_DISTINCT
+    with monkeypatch.context() as m:
+        m.setattr(mv_mod, "KEYSET_MAX_DISTINCT", 10)
+        assert KeySet.of_fold(st, ["event_id"]).vals is None
+    got = KeySet.of_fold(st, ["event_id"])
+    assert got.vals is not None and got.has_null is False and len(got.vals) == 50
     # row-count bound -> None
-    assert chunk_key_values(st, "event_id", max_rows=10) is None
+    with monkeypatch.context() as m:
+        m.setattr(mv_mod, "KEYSET_MAX_ROWS", 10)
+        assert KeySet.of_fold(st, ["event_id"]).vals is None
     # replay (no fresh fold) -> None
     st.last_fold = None
-    assert chunk_key_values(st, "event_id") is None
-    # composite keys: _chunk_affected_values declines, apply_batch still OK
+    assert KeySet.of_fold(st, ["event_id"]).vals is None
+    # composite keys: no literal values, apply_batch still OK
     mv = MaterializedGroupAgg(
         spark, str(tmp_path / "mv2"), ["k1", "k2"], "event_id", "value"
     )
@@ -1284,7 +1297,7 @@ def test_chunk_key_values_fallbacks(spark, tmp_path):
         "event_id int, k1 int, k2 string, value double",
     )
     mv.apply_batch(with_ops(d2, 1))
-    assert mv._chunk_affected_values(mv.state.last_fold) is None
+    assert KeySet.of_fold(mv.state, mv.keys).vals is None
     assert mv.result().count() == 3
 
 
@@ -1318,9 +1331,105 @@ def test_join_literal_key_path_null_keys(spark, tmp_path):
     assert rows == {(1, 5.0), (3, 5.0)}
 
 
+def _agg_of(df):
+    v = F.col("value")
+    return df.groupBy("k").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        (F.sum(F.round(v * 10000, 0).cast("long")) / 10000.0).alias("total"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+    )
+
+
+def test_agg_redelivery_before_mv_epoch(spark, tmp_path):
+    """A batch whose state fold committed but whose MV epoch was never
+    written (a crash between the two) is redelivered under its batch id:
+    the fold is skipped, so the key set has no chunk files to read — its
+    key frame comes from the batch plan and its buckets from the Spark
+    collect — and the MV must still equal the batch aggregate."""
+    from risingwave_spark.streaming.mv import KeySet, MaterializedGroupAgg
+
+    df = spark.createDataFrame(
+        [(i, i % 4, float(i)) for i in range(30)], "event_id int, k int, value double"
+    )
+    mv = MaterializedGroupAgg(spark, str(tmp_path / "mv"), ["k"], "event_id", "value")
+    mv.apply_batch(with_ops(df.filter("event_id < 20"), 1), batch_id=0)
+    b1 = with_ops(df.filter("event_id >= 20"), 1).unionByName(
+        with_ops(df.filter("event_id < 5"), -1)
+    )
+    # the crash: batch 1 reaches the state, not the MV
+    mv.state.fold(
+        b1.where("__op > 0").drop("__op"), b1.where("__op < 0").drop("__op"),
+        batch_id=1, tomb_extra_cols=["k"],
+    )
+    mv.apply_batch(b1, batch_id=1)
+    assert mv.state.last_fold is None
+    assert KeySet.of_fold(mv.state, mv.keys).buckets is None
+    expected = _agg_of(df.filter("event_id >= 5"))
+    assert sorted(map(tuple, mv.result().collect())) == sorted(
+        map(tuple, expected.collect())
+    )
+
+
+def test_join_redelivery_before_mv_epoch(spark, tmp_path):
+    """The stream-join form of the redelivery above: the left side's
+    fold committed, the join MV epoch did not; the redelivered apply
+    re-joins the batch plan's keys and must equal the batch join."""
+    from risingwave_spark.streaming.join import RetractableStreamJoin
+
+    L = spark.createDataFrame(
+        [(i, i % 5, float(i)) for i in range(20)], "lid int, lk int, lv double"
+    )
+    R = spark.createDataFrame([(j, j, f"r{j}") for j in range(5)], "rid int, rk int, rv string")
+    jv = RetractableStreamJoin(spark, str(tmp_path / "j"), ["lk"], ["rk"], "lid", "rid")
+    jv.apply(with_ops(L.filter("lid < 10"), 1), with_ops(R, 1), batch_id=0)
+    b1 = with_ops(L.filter("lid >= 10"), 1).unionByName(
+        with_ops(L.filter("lid < 3"), -1)
+    )
+    jv.state_l.fold(
+        b1.where("__op > 0").drop("__op"), b1.where("__op < 0").drop("__op"),
+        batch_id=1, tomb_extra_cols=["lk"],
+    )
+    jv.apply(b1, None, batch_id=1)
+    assert jv.state_l.last_fold is None
+    live = L.filter("lid >= 3")
+    expected = live.join(R, live["lk"] == R["rk"]).select("lid", "rid", "lv", "rv")
+    got = jv.result().select("lid", "rid", "lv", "rv")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
+
+
+def test_over_window_changelog_carries_commit_ts(spark, tmp_path):
+    """Every MV kind writes its changelog chunks through one writer, so an
+    over-window MV's chunk carries the _COMMIT_TS_MS marker a SINCE <ts>
+    cursor bounds against (not the directory mtime)."""
+    import os
+    import time
+
+    from risingwave_spark.streaming.over_window import MaterializedOverWindowDelta
+
+    mvw = MaterializedOverWindowDelta(
+        spark, str(tmp_path / "owd"), ["k"], ["eid"], "eid",
+        funcs={"rn": ("row_number",)}, payload_cols=["v"],
+    )
+    mvw.emit_changelog = True
+    df = spark.createDataFrame(
+        [("a", i, float(i)) for i in range(4)], "k string, eid int, v double"
+    )
+    t0 = int(time.time() * 1000)
+    mvw.apply_batch(with_ops(df.filter("eid < 2"), 1))
+    mvw.apply_batch(with_ops(df.filter("eid >= 2"), 1))
+    chunks = sorted(os.listdir(mvw.changelog_dir))
+    assert len([c for c in chunks if c.startswith("c")]) == 2, chunks
+    for c in chunks:
+        if not c.startswith("c"):
+            continue
+        with open(os.path.join(mvw.changelog_dir, c, "_COMMIT_TS_MS")) as f:
+            assert t0 <= int(f.read()) <= int(time.time() * 1000)
+
+
 def test_chunk_boundaries_local_equals_agg(spark, tmp_path):
     """_chunk_boundaries_local (r12: driver-side pandas boundary min over
-    the chunk files) must equal the Spark boundary agg row-for-row, and
+    the fold's chunk columns) must equal the Spark boundary agg row-for-row, and
     must decline (None) on NULL order values so the agg fallback keeps
     Spark's struct-min null ordering."""
     from risingwave_spark.streaming.over_window import MaterializedOverWindowDelta
@@ -1338,8 +1447,7 @@ def test_chunk_boundaries_local_equals_agg(spark, tmp_path):
     ] + [("b", t0, 99, 1.0)]
     df = spark.createDataFrame(rows, "k string, ts timestamp, eid int, v double")
     mvw.apply_batch(with_ops(df, 1))
-    lf = mvw.state.last_fold
-    local = mvw._chunk_boundaries_local(lf, ["__bk0"], ["__b0", "__b1"])
+    local = mvw._chunk_boundaries_local(["__bk0"], ["__b0", "__b1"])
     assert local is not None
     agg = (
         df.groupBy("k")
@@ -1362,9 +1470,7 @@ def test_chunk_boundaries_local_equals_agg(spark, tmp_path):
         funcs={"rn": ("row_number",)}, payload_cols=["v"],
     )
     mvw2.state.fold(df2, df2.limit(0))
-    assert mvw2._chunk_boundaries_local(
-        mvw2.state.last_fold, ["__bk0"], ["__b0", "__b1"]
-    ) is None
+    assert mvw2._chunk_boundaries_local(["__bk0"], ["__b0", "__b1"]) is None
 
 
 def test_key_values_filter_sql_escaping(spark):
