@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 from risingwave_spark.streaming.mv import (
     OP_COL,
     ChunkedState,
+    DeltaPlan,
     MaterializedView,
+    fold_keys,
     non_strict_analysis,
     with_ops,
     write_changelog,
@@ -71,6 +73,10 @@ class Table:
         self.pk = pk
         self.state = ChunkedState(spark, path, pk)
         self.downstream: list[Edge] = []
+        #: columns a DELETE's tombstones carry beside the pk: the group
+        #: keys of the value-state MVs over this table, so their key sets
+        #: come from the fold's files (`mv.fold_keys`) without a collect
+        self.tomb_cols: list[str] = []
         #: TTL (reference e2e_test/ttl/ttl.slt, `retention_seconds` WITH
         #: option — APPEND ONLY tables only): rows expire by ingest-chunk
         #: commit time; reads skip expired chunks at FILE level.
@@ -120,7 +126,8 @@ class StreamJoinChainMv:
     joins the maintained result of steps <i with table i+1, each step's
     changelog (−1 old affected rows / +1 recomputed) feeds the next
     step's LEFT input, and an optional GROUP BY hangs a MaterializedView
-    off the last step (mv-on-mv.md). DML — including deletes — on ANY
+    — or a ValueAggMv for count/sum bodies — off the last step
+    (mv-on-mv.md). DML — including deletes — on ANY
     participating table keeps the whole chain exact. A 2-input join is
     a one-step chain.
 
@@ -164,12 +171,20 @@ class StreamJoinChainMv:
             # the right pk never becomes part of the row identity
             if s.get("how", "inner") not in ("left_semi", "left_anti"):
                 ids_acc = ids_acc + ids_r
-        self.agg: MaterializedView | None = None
+        #: row identity of the last step's rows (the agg level's row id)
+        self.row_ids = ids_acc
+        #: the GROUP BY level: a MaterializedView, or a ValueAggMv that
+        #: `Engine.create_stream_join_chain_mv` attaches after backfill
+        self.agg = None
         if keys is not None and recompute is not None:
             self.agg = MaterializedView(
                 spark, os.path.join(state_dir, "agg"), keys, ids_acc, recompute
             )
             self.agg.key_of = key_of
+
+    @property
+    def unique_keys(self) -> bool:
+        return self.agg is not None
 
     @property
     def downstream(self) -> list:
@@ -1036,7 +1051,7 @@ class Engine:
 
     def create_materialized_view(
         self, name: str, base: str, keys: list[str], recompute, key_of=None,
-        hidden: list[str] | None = None, seed=None,
+        hidden: list[str] | None = None, seed=None, delta: DeltaPlan | None = None,
     ) -> MaterializedViewHandle:
         """CREATE MATERIALIZED VIEW over a TABLE or another MV:
         `recompute(rows)` is the per-affected-group query body (any
@@ -1044,7 +1059,9 @@ class Engine:
         keys (GROUP BY k % 2), pass `key_of(rows)` annotating rows with
         the key columns. Backfills from the base's current state, then
         stays maintained: DML batches flow table → MV → downstream MVs
-        as changelogs (mv-on-mv.md)."""
+        as changelogs (mv-on-mv.md). `delta` (from the SQL compile
+        path's state classifier) folds batches into the MV itself
+        instead of keeping a copy of the input (`DeltaPlan.view`)."""
         recompute = _non_strict(self.spark, recompute)
         if base in self.tables:
             t = self.tables[base]
@@ -1076,26 +1093,20 @@ class Engine:
             # tombstones match on all pk columns)
             row_id = up.view.keys[0] if len(up.view.keys) == 1 else list(up.view.keys)
             backfill = up.view.result()
-        if hidden:
+        path = os.path.join(self.warehouse, f"mv_{name}")
+        mv = None
+        if delta is not None:
+            mv = delta.view(self.spark, path, keys, recompute, backfill.limit(0))
+        if mv is None and hidden:
             cls = SimpleAggMv if seed is not None else ProjectedMaterializedView
-            mv = cls(
-                self.spark,
-                os.path.join(self.warehouse, f"mv_{name}"),
-                keys,
-                row_id,
-                recompute,
-                hidden,
-            )
+            mv = cls(self.spark, path, keys, row_id, recompute, hidden)
             if seed is not None:
                 mv.seed = seed
-        else:
-            mv = MaterializedView(
-                self.spark,
-                os.path.join(self.warehouse, f"mv_{name}"),
-                keys,
-                row_id,
-                recompute,
-            )
+        elif mv is None:
+            mv = MaterializedView(self.spark, path, keys, row_id, recompute)
+        elif base in self.tables:  # a delta view: see Table.tomb_cols
+            t = self.tables[base]
+            t.tomb_cols += [k for k in keys if k not in t.tomb_cols]
         mv.key_of = _non_strict(self.spark, key_of) if key_of else None
         # Backfill: current base state (the reference's
         # snapshot-then-switchover bootstrap). A re-opened MV already
@@ -1125,8 +1136,9 @@ class Engine:
         pointer (batch_ns '__backfill'), and BACKFILL_PROGRESS records
         completed slices durably. A crash mid-slice re-applies that
         slice idempotently (the state fold is skipped by its batch
-        pointer; the group recompute is an idempotent splice); a crash
-        between slices resumes at the next one. K=1 (default) keeps the
+        pointer; the group recompute is an idempotent splice; a
+        delta-folded MV skips a slice its MANIFEST records as applied);
+        a crash between slices resumes at the next one. K=1 (default) keeps the
         one-batch bootstrap. At 100 TB this is the difference between
         re-reading the whole base table after a mid-backfill failure and
         re-reading one slice."""
@@ -1257,6 +1269,7 @@ class Engine:
         project=None,
         key_of=None,
         renames: list | None = None,
+        delta: DeltaPlan | None = None,
     ) -> MaterializedViewHandle:
         """CREATE MATERIALIZED VIEW over an N-way stream-stream join of
         inputs — engine tables or agg-keyed MVs (left-deep; see
@@ -1266,7 +1279,8 @@ class Engine:
         `steps[i]` = {left_on, right_on, how, cond, pre_l, pre_r}
         joining the running result with `tbls[i+1]`; a 2-input join is a
         one-step chain. Backfills each level from current snapshots,
-        then wires the changelog cascade + per-input feeds."""
+        then wires the changelog cascade + per-input feeds. `delta` makes
+        the GROUP BY level a `ValueAggMv` (see `create_materialized_view`)."""
         if recompute is not None:
             recompute = _non_strict(self.spark, recompute)  # non_strict_mode.slt
         if key_of is not None:
@@ -1283,9 +1297,7 @@ class Engine:
             steps,
             [pk for pk, _, _ in resolved],
             keys=keys,
-            recompute=recompute,
             project=project,
-            key_of=key_of,
         )
         # Backfill LEVEL BY LEVEL (each level's snapshot feeds the next)
         # BEFORE hooking the cascade and the agg — the hooks would
@@ -1305,7 +1317,15 @@ class Engine:
                     left=with_ops(left, 1),
                     right=with_ops(right, 1),
                 )
-        if chain.agg is not None:
+        if recompute is not None:
+            agg_dir = os.path.join(self.warehouse, f"jmv_{name}", "agg")
+            if delta is not None:
+                chain.agg = delta.view(
+                    self.spark, agg_dir, keys, recompute, chain.joins[-1].result().limit(0)
+                )
+            if chain.agg is None:
+                chain.agg = MaterializedView(self.spark, agg_dir, keys, chain.row_ids, recompute)
+                chain.agg.key_of = key_of
             if not chain.agg.mv.exists():
                 chain.agg.apply_batch(with_ops(chain.joins[-1].result(), 1))
             chain.joins[-1].downstream.append(chain.agg)
@@ -1628,8 +1648,11 @@ class Engine:
         t.state.fold(
             batch.where(f"`{OP_COL}` > 0").drop(OP_COL),
             batch.where(f"`{OP_COL}` < 0").drop(OP_COL),
+            tomb_extra_cols=t.tomb_cols,
             commit_ts=self._now_epoch(),
         )
+        # delta-folded MVs read the batch's keys from the fold's files
+        batch._rw_keys = fold_keys(t.state)
         t._register()
         self._fan_out(t.downstream, batch)
         # only MVs reachable from this table moved; plain views are SQL

@@ -54,7 +54,7 @@ from risingwave_spark.functions.pgsql import (
     _unmask,
     pg_to_spark_sql,
 )
-from risingwave_spark.streaming.mv import OP_COL, non_strict_analysis, with_ops
+from risingwave_spark.streaming.mv import OP_COL, DeltaPlan, non_strict_analysis, with_ops
 
 if TYPE_CHECKING:  # pragma: no cover
     from risingwave_spark.api import Engine
@@ -186,6 +186,120 @@ _AGG_FN_RX = re.compile(
     re.I,
 )
 _KW_ALIAS = r"(?!INNER\b|LEFT\b|RIGHT\b|FULL\b|CROSS\b|JOIN\b|ON\b|WHERE\b|GROUP\b|HAVING\b|ORDER\b|LIMIT\b)"
+# what a delta-folded MV body may not contain anywhere: a subquery, the
+# barrier clock, a FILTER clause or a window
+_DELTA_BLOCKERS = re.compile(
+    r"\bSELECT\b|\b(?:now|current_timestamp|proctime)\s*\(|\bFILTER\s*\(|\bOVER\b", re.I
+)
+
+
+def _mv_state_kind(
+    select_items: list[tuple],
+    keys: list[str] | None,
+    clauses: str = "",
+    derived: bool = False,
+    joined: bool = False,
+) -> tuple[str, list]:
+    """The state an MV body needs — the one classifier behind CREATE (the
+    generic grouped path and the stream-join GROUP BY level) and
+    EXPLAIN. A pure function of the parsed body: `select_items`
+    [(expr, alias)], the GROUP BY `keys` (None without GROUP BY),
+    `clauses` (the WHERE/HAVING text), whether a key is `derived` from an
+    expression and whether the body reads a `joined` dimension table.
+
+    - ("value", aggs): GROUP BY plain columns, and every other select
+      item is one count(*), count(x) or sum(x) — no DISTINCT, FILTER,
+      HAVING, now() or subquery. aggs = [(select index, "count"|"sum",
+      argument text, None for count(*))]. A sum must also come out as
+      an integer (`DeltaPlan.view` checks the analyzed types).
+    - ("project", []): no GROUP BY and no aggregate — a row-grain
+      projection/filter, stateless when its base allows it
+      (`_delta_project_ok`).
+    - ("materialized", []): anything else keeps a copy of its input."""
+    texts = [e for e, _ in select_items] + [clauses or ""]
+    if derived or joined or any(_DELTA_BLOCKERS.search(_mask_strings(t)[0]) for t in texts):
+        return "materialized", []
+    masked = [_mask_strings(e.strip()) for e, _ in select_items]
+    if keys is None:
+        if any(_AGG_FN_RX.search(m) or re.match(r"DISTINCT\b", m, re.I) for m, _ in masked):
+            return "materialized", []
+        return "project", []
+    if re.search(r"\bHAVING\b", _mask_strings(clauses or "")[0], re.I):
+        return "materialized", []
+    aggs = []
+    for i, ((expr, alias), (m, lits)) in enumerate(zip(select_items, masked)):
+        col = m.split(".")[-1]
+        if re.fullmatch(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*", m) and col in keys and alias in (None, col):
+            continue  # a group key
+        fm = re.match(r"(count|sum)\s*\(", m, re.I)
+        if not fm:
+            return "materialized", []
+        # the call's closing paren must end the item: no FILTER/OVER/
+        # arithmetic around the aggregate
+        depth = 0
+        for j in range(fm.end() - 1, len(m)):
+            depth += {"(": 1, ")": -1}.get(m[j], 0)
+            if depth == 0:
+                break
+        inner = m[fm.end():j].strip()
+        if (
+            depth
+            or j != len(m) - 1
+            or not inner
+            or re.match(r"(DISTINCT|ALL)\b", inner, re.I)
+            or _AGG_FN_RX.search(inner)
+            or (inner == "*" and fm.group(1).lower() == "sum")
+        ):
+            return "materialized", []
+        aggs.append((i, fm.group(1).lower(), None if inner == "*" else _unmask(inner, lits)))
+    return "value", aggs
+
+
+def _delta_project_ok(engine: "Engine", base: str, select_items: list[tuple]) -> bool:
+    """A "project" MV body is stateless only over an MV whose rows are
+    unique on its keys, selecting those keys unrenamed. Over a table a
+    pk is not enforced without ON CONFLICT, so rows may repeat a key."""
+    h = engine.mv_handles.get(base)
+    if h is None or not getattr(h.view, "unique_keys", False):
+        return False
+    derived: dict = {}
+    _keys, missing = _row_grain_keys(list(h.view.keys), select_items, derived)
+    return not missing and not derived
+
+
+def _value_delta(
+    spark: SparkSession, select_items: list[tuple], aggs: list, tmp: str, source: str
+) -> DeltaPlan:
+    """DeltaPlan of a "value" MV body (`_mv_state_kind`): its per-row
+    contributions select, FROM `source` (the batch's temp view `tmp`
+    with the body's alias and WHERE, PG syntax), `__rw_c<i>` per select
+    item — the key itself, `__op` for count(*), `__op` where x is not
+    NULL for count(x), `__op * x` for sum(x) — then the row count and
+    each sum's non-null count."""
+    op = f"CAST({OP_COL} AS BIGINT)"
+    by_idx = {i: (fn, arg) for i, fn, arg in aggs}
+    cols, nns = [], []
+    for i, (expr, _alias) in enumerate(select_items):
+        if i not in by_idx:
+            cols.append(f"{expr} AS __rw_c{i}")
+            continue
+        fn, arg = by_idx[i]
+        nn = f"CASE WHEN ({arg}) IS NULL THEN CAST(0 AS BIGINT) ELSE {op} END"
+        if arg is None:
+            cols.append(f"{op} AS __rw_c{i}")
+        elif fn == "count":
+            cols.append(f"{nn} AS __rw_c{i}")
+        else:
+            cols.append(f"{op} * CAST(({arg}) AS BIGINT) AS __rw_c{i}")
+            nns.append(f"{nn} AS __rw_nn_{i}")
+    sel = ", ".join([*cols, f"{op} AS __rw_rows", *nns])
+    body = pg_to_spark_sql(f"SELECT {sel} FROM {source}")
+
+    def contrib(batch: DataFrame) -> DataFrame:
+        batch.createOrReplaceTempView(tmp)
+        return spark.sql(body)
+
+    return DeltaPlan("value", contrib, [i for i, fn, _ in aggs if fn == "sum"])
 
 
 def _sql_literal(v, pg_returns: str) -> str:
@@ -4285,9 +4399,18 @@ def _handle_create_stream_join_mv(
                 keep = [c for c in rows.columns if c not in derived]
                 return rows.select(*keep).selectExpr("*", *exprs)
 
+        kind, aggs = _mv_state_kind(
+            select_items,
+            keys,
+            (where or "") + (f" HAVING {having}" if having else ""),
+            derived=bool(derived),
+        )
+        delta = None
+        if kind == "value":
+            delta = _value_delta(spark, select_items, aggs, tmp, f"{tmp}{where_sql}")
         engine.create_stream_join_chain_mv(
             name, tables, steps, keys=keys, recompute=recompute,
-            key_of=key_of, renames=renames,
+            key_of=key_of, renames=renames, delta=delta,
         )
     else:
         project = None
@@ -5478,6 +5601,9 @@ def _mv_stream_pipeline(engine: "Engine", stmt: str) -> list[str]:
             "└─ DistinctOn { first-row-per-key, retractable }",
             "   └─ StreamTableScan",
         ]
+    ol = _extract_trailing_order_limit(masked, _lits)
+    if ol is not None:
+        masked = ol[0]
     try:
         cj = _desugar_comma_from(engine, masked)
     except ValueError:
@@ -5496,7 +5622,11 @@ def _mv_stream_pipeline(engine: "Engine", stmt: str) -> list[str]:
             pad = "└─ "
             indent = ""
             if agg:
-                lines.append("└─ MaterializedGroupAgg { changelog-fed }")
+                kind, _items = _explain_state_kind(pj["select"], pj["rest"] or "")
+                lines.append(
+                    "└─ HashAgg { value state }" if kind == "value"
+                    else "└─ MaterializedGroupAgg { changelog-fed }"
+                )
                 indent = "   "
             n = len(pj["tables"])
             for lvl in range(n - 1):
@@ -5509,6 +5639,14 @@ def _mv_stream_pipeline(engine: "Engine", stmt: str) -> list[str]:
             return lines
     join_kw = re.search(r"\bJOIN\b", masked, re.I)
     agg = re.search(r"\bGROUP\s+BY\b", masked, re.I)
+    kind = "materialized"
+    sm = _SELECT_SHAPE.match(body)
+    if sm:
+        kind, items = _explain_state_kind(
+            sm.group("select"), sm.group("rest") or "", joined=bool(temporal or join_kw)
+        )
+        if kind == "project" and not _delta_project_ok(engine, sm.group("from"), items):
+            kind = "materialized"
     mid = []
     if temporal or join_kw:
         mid.append(
@@ -5517,13 +5655,35 @@ def _mv_stream_pipeline(engine: "Engine", stmt: str) -> list[str]:
         )
     if agg:
         mid.append(
-            ("   " if mid else "") + "└─ MaterializedGroupAgg "
-            "{ affected-group recompute, bucketed state }"
+            ("   " if mid else "")
+            + ("└─ HashAgg { value state }" if kind == "value" else "└─ MaterializedGroupAgg "
+               "{ affected-group recompute, bucketed state }")
         )
     if not mid:
-        mid.append("└─ RetractableRowView { row-grain, filter/project }")
+        mid.append(
+            "└─ Project { stateless }" if kind == "project"
+            else "└─ RetractableRowView { row-grain, filter/project }"
+        )
     pad = "   " * len(mid)
     return out + mid + [f"{pad}└─ StreamTableScan"]
+
+
+def _explain_state_kind(select: str, rest: str, joined: bool = False) -> tuple[str, list]:
+    """`_mv_state_kind` of a masked MV body's select list and trailing
+    clauses, with (select items) — the same verdict CREATE reaches, for
+    EXPLAIN. GROUP BY items that are not (qualified) columns, or that
+    the select list renames, are derived keys."""
+    items = [_parse_select_item(i) for i in _split_top_level(select)]
+    gbm = re.search(r"\bGROUP\s+BY\s+(.*?)(\s+HAVING\b.*)?$", rest, re.I | re.S)
+    keys, derived = None, False
+    if gbm:
+        keys = []
+        for it in _split_top_level(gbm.group(1)):
+            if it.isdigit() and 0 < int(it) <= len(items):
+                it = items[int(it) - 1][0].strip()
+            derived |= not re.fullmatch(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*", it)
+            keys.append(it.split(".")[-1])
+    return _mv_state_kind(items, keys, rest, derived=derived, joined=joined)[0], items
 
 
 def _extract_trailing_order_limit(masked: str, lits: list[str]):
@@ -5954,7 +6114,24 @@ def _handle_create_mv_core(engine: "Engine", ast: dict) -> DataFrame:
             seed=seed,
         )
     else:
-        engine.create_materialized_view(name, base, keys, recompute, key_of=key_of)
+        kind, aggs = _mv_state_kind(
+            select_items,
+            keys if gb else None,
+            _unmask(rest, lits),
+            derived=bool(derived),
+            joined=has_join,
+        )
+        delta = None
+        if kind == "value":
+            source = _unmask(f"{tmp}{f' {alias}' if alias else ''}{rest[: gb.start()]}", lits)
+            delta = _value_delta(spark, select_items, aggs, tmp, source)
+        elif kind == "project" and _delta_project_ok(engine, base, select_items):
+            delta = DeltaPlan("project")
+        engine.create_materialized_view(
+            name, base, keys, recompute, key_of=key_of, delta=delta
+        )
+        if gb:
+            engine.mv_handles[name].view.unique_keys = True
     if has_now:
         engine._register_temporal_mv(name, pred_sql)
     engine._record_ddl(name, ast["stmt"])

@@ -10,10 +10,12 @@ Reference semantics being reproduced (SURVEY.md §1.2, §2.2):
   snapshot version with an atomic pointer swap (Delta MERGE stand-in; the
   container has no Delta jars).
 - HashAgg with retraction (`src/stream/src/executor/hash_agg.rs:64`):
-  value-state aggs (count/sum) fold deltas directly; MaterializedInput
-  aggs (min/max) need the input rows of affected groups
-  (`aggregation/minput.rs`) — we keep a values-state table and re-aggregate
-  ONLY the groups touched by the batch.
+  value-state aggs (count/sum) fold deltas directly — `ValueAggMv` adds
+  each batch's signed per-group deltas to the MV's own rows and keeps no
+  copy of its input; MaterializedInput aggs (min/max) need the input rows
+  of affected groups (`aggregation/minput.rs`) — `MaterializedView` keeps
+  a values-state table and re-aggregates ONLY the groups touched by the
+  batch. Project/Filter keep no state (`ProjectMv`).
 
 Scale posture: all per-batch work is bounded by the touched groups
 (semi-join on affected keys), state tables are key-partitioned parquet,
@@ -28,6 +30,7 @@ import shutil
 import threading
 from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -370,6 +373,11 @@ class _BucketedMvTable:
     def exists(self) -> bool:
         return self._manifest["epoch"] >= 0
 
+    def applied(self, batch_ns: str | None) -> int | None:
+        """Last batch id of namespace `batch_ns` whose write flipped the
+        manifest (see `overwrite_buckets`' `applied`), or None."""
+        return self._manifest.get("applied", {}).get(batch_ns or "")
+
     def bucket_expr(self):
         """See `key_bucket_expr`: crc32 so the same bucket is computable
         driver-side with zero extra Spark jobs (`KeySet.buckets`).
@@ -444,7 +452,11 @@ class _BucketedMvTable:
         return out
 
     def overwrite_buckets(
-        self, df: DataFrame, touched: list[int] | None, before_flip=None
+        self,
+        df: DataFrame,
+        touched: list[int] | None,
+        before_flip=None,
+        applied: tuple | None = None,
     ) -> None:
         """Write `df` (the complete new content of `touched` buckets; pass
         None on first materialization to mean "all") as a new epoch, then
@@ -453,6 +465,8 @@ class _BucketedMvTable:
         just written: a caller derives what it must persist before the
         flip (the changelog) from those files instead of re-running
         `df`'s plan. If it raises, the manifest is left as it was.
+        `applied=(batch_ns, batch_id)` records the batch as applied in
+        the same manifest flip as the epoch (`applied()` reads it back).
 
         Adaptive layout (measured): a batch touching most of the MV writes
         a FLAT epoch (plain coalesced parquet — no per-bucket small files,
@@ -510,15 +524,25 @@ class _BucketedMvTable:
         )
         self._manifest["buckets"] = {str(b): ep for b, ep in buckets.items()}
         self._manifest["epoch"] = epoch
+        if applied is not None:
+            self._manifest.setdefault("applied", {})[applied[0] or ""] = applied[1]
         self._flip_manifest()
 
     def splice(
-        self, recomputed: DataFrame, keyset: "KeySet", changelog: bool = False, log=None
+        self,
+        recomputed,
+        keyset: "KeySet",
+        changelog: bool = False,
+        log=None,
+        applied: tuple | None = None,
     ) -> DataFrame | None:
         """Replace the rows of `keyset`'s keys by `recomputed`: the touched
         buckets' prior rows outside the key set ∪ `recomputed` become the
         next epoch (`recomputed` alone on first materialization, which
-        writes every bucket). With `changelog`, return the write's
+        writes every bucket). `recomputed` may be a callable taking the
+        key set's prior rows (None on first materialization) — a delta
+        fold adds to them. `applied` passes to `overwrite_buckets`. With
+        `changelog`, return the write's
         changelog, read back from files instead of re-running the
         recompute: −1 the key set's rows of the prior epochs, which the
         write keeps until the next one, +1 those of the epoch just
@@ -529,15 +553,20 @@ class _BucketedMvTable:
         checkpointed, or plans would compound down an MV chain —
         exponential plan text (driver-heap OOM in the listener)."""
         touched = prev = None
-        content = recomputed
         if self.exists():
             touched = keyset.buckets
             if touched is None:
                 touched = self.touched_buckets(keyset.frame)
             prev = self.read_buckets(touched)
+            if callable(recomputed):
+                recomputed = recomputed(keyset.semi(prev, self.keys))
             content = keyset.anti(prev, self.keys).unionByName(recomputed)
+        else:
+            if callable(recomputed):
+                recomputed = recomputed(None)
+            content = recomputed
         if not changelog:
-            self.overwrite_buckets(content, touched)
+            self.overwrite_buckets(content, touched, applied=applied)
             return None
         out = None
 
@@ -551,7 +580,7 @@ class _BucketedMvTable:
             if log is not None:
                 log(out)
 
-        self.overwrite_buckets(content, touched, before_flip=before_flip)
+        self.overwrite_buckets(content, touched, before_flip=before_flip, applied=applied)
         return out
 
     def write(self, df: DataFrame) -> None:
@@ -1117,10 +1146,13 @@ class ChunkedState:
 
 class KeySet:
     """The keys one fold touched — the single place a maintained view
-    (group agg, stream join, over-window) decides which groups a batch
-    affects and how to filter by them. Built once per folded side, from
-    the fold's just-written chunk files, so no Spark job re-derives
-    what the fold already wrote:
+    (group agg, stream join, over-window, delta-folded MV) decides which
+    groups a batch affects and how to filter by them. Built once per
+    folded side, from the fold's just-written chunk files (`of_fold`),
+    so no Spark job re-derives what the fold already wrote; a view with
+    no state of its own takes them from its producer or one capped
+    collect of the batch (`of_batch`); `of_arrow` turns the key columns
+    into the first two answers. It holds:
 
     - `vals` / `has_null`: the distinct non-null values and whether a
       NULL key occurred, for a single int or string key of at most
@@ -1162,10 +1194,6 @@ class KeySet:
         renamed to `names`. `plan()` returns the batch's key tuples (named
         `keys`) when the chunk files cannot: on a replay, or when the keys
         are `derived` from the input columns rather than stored in them."""
-        import zlib
-
-        import pyarrow as pa
-
         names = list(names or keys)
 
         def from_plan():
@@ -1175,13 +1203,11 @@ class KeySet:
         lf = state.last_fold
         if lf is None:
             return cls(names, from_plan, empty=None)
-        ks = cls(names, from_plan, empty=lf["v_rows"] + lf["t_rows"] == 0)
-        if ks.empty:
-            ks.vals, ks.buckets = [], []
+        if lf["v_rows"] + lf["t_rows"] == 0 or derived:
+            ks = cls(names, from_plan, empty=lf["v_rows"] + lf["t_rows"] == 0)
+            if ks.empty:
+                ks.vals, ks.buckets = [], []
             return ks
-        if derived:
-            return ks
-        ks._chunked = True
 
         def from_chunks():
             df = state.fold_frame(keys)
@@ -1191,11 +1217,34 @@ class KeySet:
                 df = df.select(*[F.col(k).alias(n) for k, n in zip(keys, names)])
             return df
 
-        ks._make_frame = from_chunks
         tab = state.fold_columns(keys)
-        if tab is None or not all(
+        if tab is None:
+            ks = cls(names, from_chunks)
+        else:
+            ks = cls.of_arrow(tab, keys, state.n_buckets, names, from_chunks)
+        ks._chunked = True
+        return ks
+
+    @classmethod
+    def of_arrow(
+        cls, tab, keys: list[str], n_buckets: int, names: list[str] | None = None, make_frame=None
+    ) -> "KeySet":
+        """Key set of the rows of `tab` (a `pyarrow.Table`) over its
+        columns `keys`, renamed to `names`: crc32 buckets when every key
+        is an int or string column (their text agrees with Spark's cast),
+        and the literal values of a single key. `make_frame()` builds the
+        Spark key frame when the filters need it."""
+        import zlib
+
+        import pyarrow as pa
+
+        ks = cls(names or keys, make_frame, empty=tab.num_rows == 0)
+        if ks.empty:
+            ks.vals, ks.buckets = [], []
+            return ks
+        if not all(
             pa.types.is_integer(t) or pa.types.is_string(t) or pa.types.is_large_string(t)
-            for t in tab.schema.types
+            for t in tab.select(list(keys)).schema.types
         ):
             return ks
         rows = tab.group_by(list(keys), use_threads=False).aggregate([])
@@ -1205,7 +1254,7 @@ class KeySet:
                 zlib.crc32(
                     b"\x1f".join(str(v).encode() for v in t if v is not None)
                 )
-                % state.n_buckets
+                % n_buckets
                 for t in tuples
             }
         )
@@ -1214,6 +1263,37 @@ class KeySet:
             if len(vals) <= KEYSET_MAX_DISTINCT:
                 ks.vals, ks.has_null = vals, len(vals) < len(tuples)
         return ks
+
+    @classmethod
+    def of_batch(cls, batch: DataFrame, keys: list[str], n_buckets: int) -> "KeySet":
+        """Key set of a changelog batch no state of the caller folded —
+        a delta-folded MV's input. A producer that knows the batch's keys
+        already hangs `batch._rw_keys(keys, n_buckets) -> KeySet | None`
+        on it (`fold_keys`, `_DeltaView._forward`). Otherwise one
+        driver-side collect of the key columns, capped at
+        KEYSET_MAX_ROWS: the batch is small and materialized (a VALUES
+        relation, a checkpointed DELETE/UPDATE, a changelog read back
+        from files). Past the cap the keys stay a Spark frame."""
+        hint = vars(batch).get("_rw_keys")
+        ks = hint(keys, n_buckets) if hint is not None else None
+        if ks is not None:
+            return ks
+
+        import pyarrow as pa
+
+        def frame():
+            return batch.select(*keys).distinct()
+
+        # a plain collect: a VALUES batch answers without a job, and the
+        # Arrow collect path costs more than it saves at these sizes
+        rows = batch.select(*keys).limit(KEYSET_MAX_ROWS + 1).collect()
+        if len(rows) > KEYSET_MAX_ROWS:
+            return cls(keys, frame)
+        try:
+            tab = pa.table({k: pa.array([r[i] for r in rows]) for i, k in enumerate(keys)})
+        except (pa.ArrowException, TypeError, ValueError):
+            return cls(keys, frame, empty=not rows)
+        return cls.of_arrow(tab, keys, n_buckets, make_frame=frame)
 
     @property
     def frame(self) -> DataFrame:
@@ -1294,11 +1374,30 @@ class KeySet:
         return df.join(f, nullsafe_cond(df, f, cols, self.names), "left_anti")
 
 
+def fold_keys(state: ChunkedState):
+    """`KeySet.of_batch` hint for the batch `state` just folded: the key
+    set read from its chunk files, while that fold is still the state's
+    last one and its chunks hold the key columns (a table's insert
+    chunk holds every column; its tombstones hold only the pk)."""
+    lf = state.last_fold
+
+    def keys_of(cols: list[str], n_buckets: int) -> KeySet | None:
+        if lf is None or state.last_fold is not lf:
+            return None
+        tab = state.fold_columns(list(cols))
+        if tab is None:
+            return None
+        return KeySet.of_arrow(tab, cols, n_buckets, make_frame=lambda: state.fold_frame(list(cols)))
+
+    return keys_of
+
+
 class _RetractableView:
     """Shared per-batch maintenance loop (the reference's HashAgg +
     MaterializedInput pattern): fold the chunk into ChunkedState, then
     recompute ONLY the groups the batch touched (its `KeySet`) and splice
-    them into the MV (untouched ∪ recomputed)."""
+    them into the MV (untouched ∪ recomputed). `_DeltaView` subclasses
+    keep no ChunkedState and fold each batch into the MV itself."""
 
     #: compact the chunked state every N folded batches (None = never).
     #: Amortizes the O(state) rewrite over N O(batch) folds — the same
@@ -1312,16 +1411,7 @@ class _RetractableView:
         self.keys = keys
         self.row_id = row_id
         self.mv = _BucketedMvTable(spark, os.path.join(state_dir, "mv"), keys)
-        # state bucketed by the same crc32 key-buckets as the MV: the
-        # per-batch recompute then prunes its state READ to the touched
-        # buckets, the read-side analog of the O(touched-buckets) write
-        self.state = ChunkedState(
-            spark,
-            os.path.join(state_dir, "state"),
-            row_id,
-            bucket_cols=keys,
-            n_buckets=self.mv.n_buckets,
-        )
+        self.state = self._open_state(state_dir)
         # MV-on-MV (reference `docs/dev/src/design/mv-on-mv.md`): this
         # view's per-batch diff (−1 old affected rows, +1 recomputed
         # rows — the Update pair) is itself a changelog, forwarded to
@@ -1340,6 +1430,18 @@ class _RetractableView:
         # reference's dispatch-key derivation). Default: identity — the
         # keys are already input columns.
         self.key_of = None
+
+    def _open_state(self, state_dir: str) -> ChunkedState | None:
+        # state bucketed by the same crc32 key-buckets as the MV: the
+        # per-batch recompute then prunes its state READ to the touched
+        # buckets, the read-side analog of the O(touched-buckets) write
+        return ChunkedState(
+            self.spark,
+            os.path.join(state_dir, "state"),
+            self.row_id,
+            bucket_cols=self.keys,
+            n_buckets=self.mv.n_buckets,
+        )
 
     def _recompute(self, rows: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
@@ -1484,6 +1586,236 @@ class MaterializedView(_RetractableView):
 
     def _recompute(self, rows: DataFrame) -> DataFrame:
         return self._fn(rows)
+
+
+#: hidden per-group row count of a `ValueAggMv`; a sum's non-null count
+#: is `__rw_nn_<select index>`
+ROWS_COL = "__rw_rows"
+
+
+def _qcol(name: str):
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def value_agg(keys: list[str], cols: list[str], sums: dict[str, str]):
+    """`fn(rows)` folding signed contribution rows (columns `cols`: the
+    MV's visible columns, then ROWS_COL and the sums' non-null counts)
+    into one row per group: every non-key column summed, groups whose
+    row count is 0 dropped, and a sum NULL when its non-null count
+    (`sums[sum column]`) is 0. The prior rows of a group are one more
+    contribution, so the same `fn` serves first materialization and
+    every later batch."""
+    aggs = [F.sum(_qcol(c)).alias(c) for c in cols if c not in keys]
+    out = [
+        F.when(_qcol(sums[c]) == 0, F.lit(None)).otherwise(_qcol(c)).alias(c)
+        if c in sums
+        else _qcol(c)
+        for c in cols
+    ]
+    group = [_qcol(k) for k in keys]
+    live = _qcol(ROWS_COL) > 0
+
+    def fn(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*group).agg(*aggs).where(live).select(*out)
+
+    return fn
+
+
+class _DeltaView(_RetractableView):
+    """An MV that folds each batch into its materialization and keeps
+    no copy of its input: no ChunkedState, no state chunk write, no
+    state scan and no compaction. Per batch: the key set
+    (`KeySet.of_batch`), then one `_BucketedMvTable.splice` whose new
+    rows `_new_rows(batch, prior)` builds from the batch and the key
+    set's prior rows. The first materialization writes `_new_rows` of
+    the whole input without collecting a key. `state_cols` are hidden
+    columns of the materialization: result(), the forwarded changelog
+    and subscription chunks drop them. The MANIFEST records `kind`, so
+    a reopened warehouse keeps each MV on the path that wrote it."""
+
+    kind = ""
+    #: rows are unique on `keys` — a ProjectMv may read this MV
+    unique_keys = True
+
+    def __init__(self, spark, state_dir, keys, fn, state_cols=()):
+        super().__init__(spark, state_dir, keys, None)
+        self._fn = fn
+        self.state_cols = list(state_cols)
+        if not self.mv.exists():
+            self.mv._manifest["kind"] = self.kind
+
+    def _open_state(self, state_dir: str) -> None:
+        return None
+
+    def _new_rows(self, batch: DataFrame, prior: DataFrame | None) -> DataFrame:  # pragma: no cover
+        raise NotImplementedError
+
+    def _redelivered(self, batch_id: int | None, batch_ns: str | None) -> bool:
+        return False
+
+    def _apply_batch_inner(
+        self,
+        batch: DataFrame,
+        batch_id: int | None = None,
+        batch_ns: str | None = None,
+    ) -> None:
+        with non_strict_analysis(self.spark):
+            if not self.mv.exists():
+                keyset = KeySet(
+                    self.keys, lambda: batch.select(*self.keys).distinct(), empty=None
+                )
+            else:
+                keyset = KeySet.of_batch(batch, self.keys, self.mv.n_buckets)
+                if keyset.is_empty():
+                    return
+            if self._redelivered(batch_id, batch_ns):
+                # already in the MV: hand downstream what a recompute
+                # would (−current +current of the key set), write nothing
+                if self.downstream:
+                    cur = keyset.semi(self.mv.read_buckets(
+                        keyset.buckets if keyset.buckets is not None
+                        else self.mv.touched_buckets(keyset.frame)
+                    ), self.keys)
+                    self._forward(
+                        with_ops(cur, -1).unionByName(with_ops(cur, 1)),
+                        keyset, batch_id, batch_ns,
+                    )
+                return
+            out = self.mv.splice(
+                lambda prior: self._new_rows(batch, prior),
+                keyset,
+                changelog=bool(self.downstream or self.emit_changelog),
+                log=self._log_changelog if self.emit_changelog else None,
+                applied=None if batch_id is None else (batch_ns, batch_id),
+            )
+            if self.downstream:
+                self._forward(out, keyset, batch_id, batch_ns)
+
+    def _forward(self, changelog: DataFrame, keyset: KeySet, batch_id, batch_ns) -> None:
+        """Hand the changelog, hidden columns dropped, to every downstream
+        view, with this batch's key set as its `_rw_keys` hint: a view
+        keyed like this one (a ProjectMv) needs no collect."""
+        out = self._visible(changelog)
+        n = self.mv.n_buckets
+        out._rw_keys = lambda cols, nb: (
+            keyset if list(cols) == keyset.names and nb == n else None
+        )
+        for d in self.downstream:
+            d.apply_batch(out, batch_id=batch_id, batch_ns=batch_ns)
+
+    def _log_changelog(self, chunk: DataFrame) -> None:
+        # chunk id = the epoch being written: monotonic, and a batch
+        # redelivered after a crash before the flip rewrites its chunk
+        write_changelog(
+            self.changelog_dir,
+            self.mv._manifest["epoch"] + 1,
+            self._visible(chunk),
+        )
+
+    def _visible(self, df: DataFrame) -> DataFrame:
+        return df.drop(*self.state_cols) if self.state_cols else df
+
+    def result(self) -> DataFrame:
+        return self._visible(self.mv.read())
+
+
+class ValueAggMv(_DeltaView):
+    """GROUP BY MV whose aggregates are all count(*), count(x) and
+    integer sum(x) — the reference HashAgg's value-state aggregates
+    (`aggregation/agg_group.rs`; only min/max/string_agg keep
+    materialized input, `minput.rs`). `contrib(batch)` maps each batch
+    row to its signed contribution (`__op` for the row count, `__op * x`
+    for a sum, ...); `fn` (see `value_agg`) adds the contributions and
+    the key set's prior rows up per group. Hidden per group: ROWS_COL
+    and each sum's non-null count.
+
+    Not idempotent: a batch id at or below the MANIFEST's applied
+    pointer for its namespace is skipped (the pointer flips with the
+    epoch it wrote)."""
+
+    kind = "value"
+
+    def __init__(self, spark, state_dir, keys, contrib, fn, state_cols):
+        super().__init__(spark, state_dir, keys, fn, state_cols)
+        self._contrib = contrib
+
+    def _redelivered(self, batch_id: int | None, batch_ns: str | None) -> bool:
+        last = self.mv.applied(batch_ns) if batch_id is not None else None
+        return last is not None and batch_id <= last
+
+    def _new_rows(self, batch: DataFrame, prior: DataFrame | None) -> DataFrame:
+        rows = self._contrib(batch)
+        if prior is not None:
+            rows = rows.unionByName(prior)
+        return self._fn(rows)
+
+
+class ProjectMv(_DeltaView):
+    """Row-grain projection/filter MV over an MV whose rows are unique on
+    its keys (the reference's stateless Project/Filter): each touched key
+    is replaced by `fn` of the batch's +1 rows — the upstream changelog
+    carries a key's whole new row, so the splice is idempotent and needs
+    no applied pointer."""
+
+    kind = "project"
+
+    def _new_rows(self, batch: DataFrame, prior: DataFrame | None) -> DataFrame:
+        return self._fn(batch.where(f"`{OP_COL}` > 0").drop(OP_COL))
+
+
+class DeltaPlan:
+    """A delta-folded MV body, as the SQL compile path built it from its
+    state classifier. Kind "value": `contrib(batch)` maps a changelog
+    batch (with `__op`) to one signed contribution row per input row —
+    `__rw_c<i>` per select item, then ROWS_COL and `__rw_nn_<i>` for
+    each select index `i` in `sums`. Kind "project": the MV's recompute
+    is the projection."""
+
+    def __init__(self, kind: str, contrib=None, sums=()):
+        self.kind = kind
+        self.contrib = contrib
+        self.sums = list(sums)
+
+    def view(self, spark, state_dir, keys, recompute, empty: DataFrame):
+        """The delta view of the MV at `state_dir`, or None to keep the
+        materialized-input path: the directory holds an MV written
+        without this state kind (a `state/` copy of its input, or a
+        MANIFEST without the kind), or the delta rows would change the
+        names or types of the columns `recompute` gives over `empty` (the
+        input with no rows) — a sum over a decimal or float column does."""
+        import json
+
+        if os.path.isdir(os.path.join(state_dir, "state")):
+            return None
+        try:
+            with open(os.path.join(state_dir, "mv", "MANIFEST")) as f:
+                if json.load(f).get("kind") != self.kind:
+                    return None
+        except (FileNotFoundError, ValueError):
+            pass
+        if self.kind == "project":
+            return ProjectMv(spark, state_dir, keys, recompute)
+        with non_strict_analysis(spark):
+            want = recompute(empty).schema
+            names = want.fieldNames()
+            hidden = [ROWS_COL] + [f"__rw_nn_{i}" for i in self.sums]
+            cols = names + hidden
+            if len(set(cols)) != len(cols):
+                return None
+            fn = value_agg(keys, cols, {names[i]: f"__rw_nn_{i}" for i in self.sums})
+
+            def contrib(batch: DataFrame) -> DataFrame:
+                return self.contrib(batch).toDF(*cols)
+
+            try:
+                got = fn(contrib(with_ops(empty, 1))).schema
+            except AnalysisException:
+                return None  # e.g. sum over an interval: no BIGINT cast
+        if [(f.name, f.dataType) for f in got.fields[: len(names)]] != [
+            (f.name, f.dataType) for f in want.fields
+        ]:
+            return None
+        return ValueAggMv(spark, state_dir, keys, contrib, fn, hidden)
 
 
 class MaterializedGroupAgg(_RetractableView):

@@ -752,3 +752,24 @@ def test_connector_ddl_option_soup_fails_loud(spark, tmpl):
         raise AssertionError(
             f"deep traceback {type(e).__name__} for: {stmt}\n{e}"
         ) from e
+
+
+_DK = st.sampled_from([0, 1, 2, None])
+_DV = st.one_of(st.none(), st.integers(-2, 4))
+_delta_op = st.one_of(
+    st.tuples(st.just("ins"), st.lists(st.tuples(_DK, _DV), min_size=1, max_size=4)),
+    st.tuples(st.just("del"), _DK),
+    st.tuples(st.just("upd_v"), _DK, _DV),
+    st.tuples(st.just("upd_k"), st.integers(0, 2), _DK),
+)
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(ops=st.lists(_delta_op, min_size=1, max_size=8))
+def test_delta_mvs_match_scratch_random(spark, tmp_path_factory, ops):
+    """Property: under random INSERT/UPDATE/DELETE sequences (NULL keys
+    and values, groups that empty and refill), the value-state MVs and
+    the projection over one equal their bodies run from scratch."""
+    from tests.test_streaming import check_delta_mvs_match_scratch
+
+    check_delta_mvs_match_scratch(spark, str(tmp_path_factory.mktemp("dmv")), ops)
