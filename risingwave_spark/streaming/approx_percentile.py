@@ -9,10 +9,11 @@ bucket is its midpoint `±2·base^b/(base+1)`, within relative error e
 of every value the bucket covers.
 
 Spark-first shape: the bucket table is a DataFrame
-(group_keys, __sign, __bucket, __cnt) in a _BucketedMvTable keyed by
-the group columns; a changelog batch becomes per-(group, sign, bucket)
-count deltas (one groupBy — the reference's LocalApproxPercentile map
-stage), merged additively into touched groups (the splice pattern).
+(group_keys, __ps, __pb, __cnt) — value sign, log bucket, count — in
+a _BucketedMvTable keyed by the group columns; a changelog batch becomes
+per-(group, sign, bucket) count deltas (one groupBy — the reference's
+LocalApproxPercentile map stage), merged additively into touched groups
+(the splice pattern).
 The quantile walk is a cumulative-sum window over each group's ≤ a few
 thousand bucket rows — state is O(buckets) per group, independent of
 row count, which is the point vs. exact percentile state.

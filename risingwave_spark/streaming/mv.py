@@ -239,8 +239,8 @@ def key_bucket_sql(keys: list[str], n_buckets: int) -> str:
     the same plan-construction economics as `key_values_filter` (r12
     change #14: isin()/Column chains pay a py4j round trip per node;
     F.expr parses JVM-side in one call)."""
-    cols = ",".join(f"CAST(`{k.replace('`', '``')}` AS STRING)" for k in keys)
-    return f"pmod(crc32(CAST(concat_ws('\x1f',{cols}) AS BINARY)), {n_buckets})"
+    args = ",".join(["'\x1f'"] + [f"CAST(`{k.replace('`', '``')}` AS STRING)" for k in keys])
+    return f"pmod(crc32(CAST(concat_ws({args}) AS BINARY)), {n_buckets})"
 
 
 def nullsafe_cond(a: DataFrame, b: DataFrame, cols_a: list[str], cols_b: list[str] | None = None):
@@ -255,71 +255,25 @@ def nullsafe_cond(a: DataFrame, b: DataFrame, cols_a: list[str], cols_b: list[st
     return cond
 
 
-class _VersionedTable:
-    """Parquet-backed state table with atomic version swap.
-
-    Stand-in for a Delta table: writes go to `<dir>/v{n}`, the `CURRENT`
-    pointer file flips only after a successful write (crash → previous
-    version stays live, matching the reference's epoch-commit semantics,
-    `docs/dev/src/design/checkpoint.md`).
-    """
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-        self._version = self._read_pointer()
-
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def _read_pointer(self) -> int:
-        try:
-            with open(self._pointer()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
-
-    def exists(self) -> bool:
-        return self._version >= 0
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, f"v{self._version}"))
-
-    def write(self, df: DataFrame):
-        """Write the next version as at most 8 files — state tables are
-        re-read every batch, so many tiny files cost more in listing/open
-        overhead than they buy in parallelism (at cluster scale you'd
-        size this to state-bytes / 128 MB instead)."""
-        nxt = self._version + 1
-        out = os.path.join(self.path, f"v{nxt}")
-        df.coalesce(8).write.mode("overwrite").parquet(out)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-        os.replace(tmp, self._pointer())
-        self._version = nxt
-        # retain ONE prior version: un-evaluated DataFrames handed to
-        # downstream MVs (the MV-on-MV changelog) may still read it
-        stale = nxt - 2
-        if stale >= 0:
-            shutil.rmtree(os.path.join(self.path, f"v{stale}"), ignore_errors=True)
-
-
 class _BucketedMvTable:
-    """MV storage hash-partitioned into key buckets so a batch's write
-    cost is O(touched buckets), not O(MV) — the keyed-MERGE / dynamic
-    partition-overwrite pattern (reference Materialize executor upserts
-    by key, `mview/materialize.rs:45`; Delta MERGE is the cluster-scale
-    analog, not available in this sandbox).
+    """Keyed state table with epoch-committed versions: the one state
+    store of MVs and operators (the reference keeps every MV and operator
+    state in one keyed state-table format, its Materialize executor
+    upserting by key, `mview/materialize.rs:45`; Delta MERGE is the
+    cluster-scale analog, not available in this sandbox).
 
-    Layout: `<dir>/e{n}/__bucket={b}/*.parquet` epoch directories plus a
-    MANIFEST json mapping bucket → the epoch holding its current rows.
-    A write materializes ONLY the touched buckets into a new epoch and
-    flips the manifest last (os.replace — crash-safe: a partial epoch
-    dir is simply overwritten on retry). Untouched buckets' files are
-    never rewritten or rewritten-as-copies; at 100 TB an MV batch that
-    touches 1% of keys rewrites ~1% of files.
+    Layout: `<dir>/e{n}/*.parquet` epoch directories plus a MANIFEST json
+    mapping each of `n_buckets` key buckets (`key_bucket_expr`) to the
+    epoch holding its current rows. A write materializes only the
+    touched buckets into a new epoch and flips the manifest last
+    (os.replace — crash-safe: a partial epoch dir is simply overwritten
+    on retry); untouched buckets' rows are never rewritten.
+
+    An epoch is read through ONE filter: the bucket expr IN the buckets
+    the manifest maps to it (none when it holds every bucket). Its other
+    rows are stale (their buckets moved to a newer epoch) and stay on
+    disk until no bucket maps to the epoch, so at most `n_buckets` epochs
+    are live, plus the ones retired by the last write.
     """
 
     # class-level defaults so partially-constructed instances (tests
@@ -338,6 +292,8 @@ class _BucketedMvTable:
         os.makedirs(path, exist_ok=True)
         self._json = json
         self._manifest = self._read_manifest()
+        if not self.exists():
+            self._adopt_versioned()
         # Plan-construction caches (r13 §B, guide §1.2 driver work):
         # Column objects are immutable name-resolved expression trees —
         # reusable across DataFrames — and the MV schema is fixed per
@@ -356,19 +312,36 @@ class _BucketedMvTable:
             with open(self._manifest_path()) as f:
                 return self._json.load(f)
         except (FileNotFoundError, ValueError):
-            return {
-                "epoch": -1,
-                "buckets": {},
-                "schema": None,
-                "retired": [],
-                "flat": [],
-            }
+            return {"epoch": -1, "buckets": {}, "schema": None, "retired": []}
 
     def _flip_manifest(self) -> None:
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
             self._json.dump(self._manifest, f)
         os.replace(tmp, self._manifest_path())
+
+    def _adopt_versioned(self) -> None:
+        """Adopt the single-version layout of older warehouses (a
+        `CURRENT` pointer to a `v{n}` dir, one prior version kept):
+        `v{n}` becomes epoch `e{n}` holding every bucket and its schema
+        comes from a footer. A crash before the MANIFEST flips re-runs the
+        adoption; one after it leaves only the unread pointer behind."""
+        try:
+            with open(os.path.join(self.path, "CURRENT")) as f:
+                n = int(f.read().strip())
+        except (FileNotFoundError, ValueError):
+            return
+        epoch_dir = os.path.join(self.path, f"e{n}")
+        if not os.path.isdir(epoch_dir):
+            os.rename(os.path.join(self.path, f"v{n}"), epoch_dir)
+        self._manifest.update(
+            epoch=n,
+            buckets={str(b): n for b in range(self.n_buckets)},
+            schema=self._json.dumps(_parquet_spark_schema(epoch_dir).jsonValue()),
+        )
+        self._flip_manifest()
+        os.remove(os.path.join(self.path, "CURRENT"))
+        shutil.rmtree(os.path.join(self.path, f"v{n - 1}"), ignore_errors=True)
 
     def exists(self) -> bool:
         return self._manifest["epoch"] >= 0
@@ -399,20 +372,25 @@ class _BucketedMvTable:
         )
         return sorted(r[0] for r in rows)
 
-    def _leaf(self, bucket: int, epoch: int) -> str:
-        return os.path.join(self.path, f"e{epoch}", f"__bucket={bucket}")
-
-    def _read_paths(self, paths: list[str]) -> DataFrame:
+    def _schema(self):
         from pyspark.sql.types import StructType
 
         src = self._manifest["schema"]
         if self._schema_struct is None or self._schema_struct_src != src:
             self._schema_struct = StructType.fromJson(self._json.loads(src))
             self._schema_struct_src = src
-        schema = self._schema_struct
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self._schema_struct
+
+    def _read_epoch(self, epoch: int) -> DataFrame:
+        """Every row in epoch `epoch`'s files, under the manifest schema.
+        recursiveFileLookup also reads the `__bucket=b` leaves of epochs
+        written by older versions, and adds no discovered `__bucket`
+        column to them."""
+        return (
+            self.spark.read.option("recursiveFileLookup", "true")
+            .schema(self._schema())
+            .parquet(os.path.join(self.path, f"e{epoch}"))
+        )
 
     def read(self) -> DataFrame:
         return self.read_buckets(
@@ -420,35 +398,30 @@ class _BucketedMvTable:
         )
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
-        """Rows of exactly these buckets. Partitioned epochs contribute
-        leaf dirs (file-level pruning); flat epochs are scanned with a
-        bucket-expr filter — they may physically retain rows of buckets
-        whose current version has since moved to a newer epoch."""
+        """Rows of exactly these buckets: each epoch the manifest maps
+        one of them to, filtered by the bucket expr to the buckets it
+        holds — an epoch may physically retain rows of buckets whose
+        current version has since moved to a newer epoch. An epoch that
+        holds every bucket is read unfiltered."""
         want = set(buckets)
-        flat_eps = set(self._manifest.get("flat", []))
-        leaf_paths: list[str] = []
-        per_flat: dict[int, list[int]] = {}
+        per_epoch: dict[int, list[int]] = {}
         for b, ep in self._manifest["buckets"].items():
-            b = int(b)
-            if b not in want:
-                continue
-            if ep in flat_eps:
-                per_flat.setdefault(ep, []).append(b)
-            else:
-                leaf_paths.append(self._leaf(b, ep))
-        out = self._read_paths(leaf_paths) if leaf_paths or not per_flat else None
-        for ep, bs in per_flat.items():
-            # ONE parsed IN predicate, not Column.isin(): isin makes a
-            # py4j round trip per literal (r12 #14; measured 120 ms per
-            # flat-epoch read in the mv fold profile vs ~2 ms parsed)
-            in_sql = (
-                f"({key_bucket_sql(self.keys, self.n_buckets)}) IN "
-                f"({','.join(str(int(b)) for b in bs)})"
-            )
-            flat = self._read_paths([os.path.join(self.path, f"e{ep}")]).filter(
-                F.expr(in_sql)
-            )
-            out = flat if out is None else out.unionByName(flat)
+            if int(b) in want:
+                per_epoch.setdefault(ep, []).append(int(b))
+        out = None
+        for ep, bs in sorted(per_epoch.items()):
+            rows = self._read_epoch(ep)
+            if len(bs) < self.n_buckets:
+                # ONE parsed IN predicate, not Column.isin(): isin makes a
+                # py4j round trip per literal (r12 #14; measured 120 ms per
+                # flat-epoch read in the mv fold profile vs ~2 ms parsed)
+                rows = rows.filter(F.expr(
+                    f"({key_bucket_sql(self.keys, self.n_buckets)}) IN "
+                    f"({','.join(str(b) for b in bs)})"
+                ))
+            out = rows if out is None else out.unionByName(rows)
+        if out is None:
+            return self.spark.createDataFrame([], self._schema())
         return out
 
     def overwrite_buckets(
@@ -460,68 +433,40 @@ class _BucketedMvTable:
     ) -> None:
         """Write `df` (the complete new content of `touched` buckets; pass
         None on first materialization to mean "all") as a new epoch, then
-        flip the manifest — ONE Spark job either way. `before_flip(rows)`,
-        if given, runs between the two with a frame reading the epoch
-        just written: a caller derives what it must persist before the
-        flip (the changelog) from those files instead of re-running
-        `df`'s plan. If it raises, the manifest is left as it was.
-        `applied=(batch_ns, batch_id)` records the batch as applied in
-        the same manifest flip as the epoch (`applied()` reads it back).
-
-        Adaptive layout (measured): a batch touching most of the MV writes
-        a FLAT epoch (plain coalesced parquet — no per-bucket small files,
-        no shuffle; readers filter by bucket expr), while a narrow batch
-        writes a PARTITIONED epoch (__bucket=N dirs, so later reads prune
-        at file level and the write volume is O(touched)). At 100 TB the
-        narrow path is the steady state; flat epochs come from backfills
-        and full-table churn, where a full rewrite is optimal anyway."""
+        flip the manifest — ONE Spark job. The epoch is plain coalesced
+        parquet (at most a file per touched bucket, and 8; no shuffle), so a
+        narrow batch writes few small files; the manifest maps every
+        touched bucket to it, and readers filter it by the bucket expr,
+        so a touched bucket with no rows in `df` simply reads empty.
+        `before_flip(rows)`, if given, runs between the two with a frame
+        reading the epoch just written: a caller derives what it must
+        persist before the flip (the changelog) from those files instead
+        of re-running `df`'s plan. If it raises, the manifest is left as
+        it was. `applied=(batch_ns, batch_id)` records the batch as
+        applied in the same manifest flip as the epoch (`applied()` reads
+        it back)."""
         epoch = self._manifest["epoch"] + 1
-        out = os.path.join(self.path, f"e{epoch}")
-        buckets = {int(b): ep for b, ep in self._manifest["buckets"].items()}
-        prev_referenced = set(buckets.values())
-        covered = max(len(set(buckets) | set(touched or [])), 1)
-        flat = touched is None or len(touched) >= 0.5 * covered
-        if flat:
-            df.coalesce(8).write.mode("overwrite").parquet(out)
-            new_paths = [out]
-            for b in range(self.n_buckets) if touched is None else touched:
-                buckets[b] = epoch  # empty buckets are harmless: the
-                # bucket-expr filter just finds no rows for them
-        else:
-            (
-                df.withColumn("__bucket", self.bucket_expr())
-                .repartition(max(1, min(len(touched), 8)), F.col("__bucket"))
-                .write.mode("overwrite")
-                .partitionBy("__bucket")
-                .parquet(out)
-            )
-            written = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out)
-                if d.startswith("__bucket=")
-            }
-            new_paths = [self._leaf(b, epoch) for b in sorted(written)]
-            for b in touched:
-                if b in written:
-                    buckets[b] = epoch
-                else:
-                    buckets.pop(b, None)  # bucket emptied (all groups gone)
+        files = 8 if touched is None else max(1, min(len(touched), 8))
+        df.coalesce(files).write.mode("overwrite").parquet(
+            os.path.join(self.path, f"e{epoch}")
+        )
         if self._manifest["schema"] is None:
             self._manifest["schema"] = self._json.dumps(df.schema.jsonValue())
         if before_flip is not None:
-            before_flip(self._read_paths(new_paths))
-        if flat:
-            self._manifest.setdefault("flat", []).append(epoch)
-        now_referenced = set(buckets.values()) | {epoch}
+            before_flip(self._read_epoch(epoch))
+        buckets = {int(b): ep for b, ep in self._manifest["buckets"].items()}
+        prev_referenced = set(buckets.values())
+        buckets.update(
+            dict.fromkeys(range(self.n_buckets) if touched is None else touched, epoch)
+        )
+        now_referenced = set(buckets.values())
         # GC: epochs retired by the PREVIOUS write (grace period for lazy
         # DataFrames handed downstream) that are still unreferenced now
         for ep in self._manifest.get("retired", []):
             if ep not in now_referenced:
                 shutil.rmtree(os.path.join(self.path, f"e{ep}"), ignore_errors=True)
         self._manifest["retired"] = sorted(prev_referenced - now_referenced)
-        self._manifest["flat"] = sorted(
-            ep for ep in self._manifest.get("flat", []) if ep in now_referenced
-        )
+        self._manifest.pop("flat", None)  # older versions' layout list
         self._manifest["buckets"] = {str(b): ep for b, ep in buckets.items()}
         self._manifest["epoch"] = epoch
         if applied is not None:
@@ -584,7 +529,8 @@ class _BucketedMvTable:
         return out
 
     def write(self, df: DataFrame) -> None:
-        """Full materialization (first backfill)."""
+        """Full write: `df` becomes the content of every bucket (a first
+        backfill, or an operator state rewritten whole each batch)."""
         self.overwrite_buckets(df, None)
 
 
@@ -635,7 +581,7 @@ class ChunkedState:
         self._schema_cache: dict = {}
         # generation pointer: compaction writes a NEW generation directory
         # and flips this pointer last (same epoch-commit discipline as
-        # _VersionedTable) — a crash mid-compaction leaves the old
+        # _BucketedMvTable) — a crash mid-compaction leaves the old
         # generation live and the half-written new one ignored.
         self._gen = self._read_gen()
         # legacy layout (pre-generation dirs): adopt as generation 0
@@ -1929,7 +1875,7 @@ class AppendOnlyGroupTopN:
         self.order_col = order_col
         self.tiebreak = tiebreak
         self.k = k
-        self.state = _VersionedTable(spark, os.path.join(state_dir, "topn"))
+        self.state = _BucketedMvTable(spark, os.path.join(state_dir, "topn"), keys)
 
     def apply_batch(self, batch: DataFrame) -> None:
         from pyspark.sql import Window as W

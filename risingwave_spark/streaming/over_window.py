@@ -815,7 +815,7 @@ class EowcOverWindow:
         payload_cols: list[str],
         delay_seconds: int,
     ):
-        from risingwave_spark.streaming.mv import _VersionedTable
+        from risingwave_spark.streaming.mv import _BucketedMvTable
 
         for name, spec in funcs.items():
             if spec[0] not in _KINDS:
@@ -855,9 +855,9 @@ class EowcOverWindow:
         self._frame_funcs = {
             n: s for n, s in funcs.items() if _frame_of(s) is not None
         }
-        self.buffer = _VersionedTable(spark, os.path.join(state_dir, "buffer"))
-        self.seeds = _VersionedTable(spark, os.path.join(state_dir, "seeds"))
-        self.tail = _VersionedTable(spark, os.path.join(state_dir, "tail"))
+        self.buffer = _BucketedMvTable(spark, os.path.join(state_dir, "buffer"), keys)
+        self.seeds = _BucketedMvTable(spark, os.path.join(state_dir, "seeds"), keys)
+        self.tail = _BucketedMvTable(spark, os.path.join(state_dir, "tail"), keys)
         self.out_path = os.path.join(state_dir, "out")
         # guard against an out dir left EMPTY by a GC'd zero-row emission
         self._emitted_any = os.path.isdir(self.out_path) and any(

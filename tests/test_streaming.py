@@ -6,6 +6,7 @@ watermark append mode)."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -1203,14 +1204,16 @@ def test_literal_keyset_fallback_join_path(spark, tmp_path, monkeypatch):
 def test_key_bucket_sql_equals_expr(spark):
     """key_bucket_sql (the one-call parsed form used by hot read paths,
     r13) must agree row-for-row with key_bucket_expr — including NULL
-    keys (concat_ws skips them), string keys, and composite keys."""
+    keys (concat_ws skips them), string keys, composite keys, and no
+    keys at all (every row in bucket 0)."""
     from risingwave_spark.streaming.mv import key_bucket_expr, key_bucket_sql
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "b"), (None, None), (7, "x'y`z\\w")],
         "k1 int, k2 string",
     )
-    for keys in (["k1"], ["k2"], ["k1", "k2"]):
+    assert {r[0] for r in df.select(F.expr(key_bucket_sql([], 16))).collect()} == {0}
+    for keys in ([], ["k1"], ["k2"], ["k1", "k2"]):
         got = df.select(
             key_bucket_expr(keys, 16).alias("e"),
             F.expr(key_bucket_sql(keys, 16)).alias("s"),
@@ -1561,3 +1564,142 @@ def test_delta_mvs_match_scratch_fixed_sequence(spark, tmp_path):
         ("upd_v", 2, 3),
         ("ins", [(0, 2), (0, 2)]),
     ])
+
+
+def _write_versioned(spark, path, df, n):
+    """Write `df` in the single-version state layout older warehouses
+    used: `v{n}` (plus a stale `v{n-1}` copy, the retained prior version)
+    and a `CURRENT` pointer naming n."""
+    rows = spark.createDataFrame(df.collect(), df.schema)
+    shutil.rmtree(path, ignore_errors=True)
+    for v in (n - 1, n):
+        rows.coalesce(2).write.parquet(os.path.join(path, f"v{v}"))
+    with open(os.path.join(path, "CURRENT"), "w") as f:
+        f.write(str(n))
+
+
+def test_bucketed_table_reads_partitioned_epochs(spark, tmp_path):
+    """A `_BucketedMvTable` directory in the older two-layout format (a
+    flat backfill epoch, a partitioned `e1/__bucket=b` epoch the MANIFEST
+    leaves out of its `flat` list, and one bucket emptied and popped)
+    reads back exactly its rows with no `__bucket` column, and a narrow
+    splice over it — including a key whose bucket was popped — and a full
+    read afterwards are correct."""
+    import json
+
+    import pyarrow as pa
+
+    from risingwave_spark.streaming.mv import KeySet, _BucketedMvTable, key_bucket_expr
+
+    path = str(tmp_path / "mv")
+    base = spark.createDataFrame([(k, k * 10) for k in range(40)], "k long, v long")
+    bucket_of = {
+        r.k: r.b for r in base.select("k", key_bucket_expr(["k"], 16).alias("b")).collect()
+    }
+    used = sorted(set(bucket_of.values()))
+    moved, popped = used[:3], used[3]
+    base.coalesce(1).write.parquet(os.path.join(path, "e0"))
+    newer = (
+        base.filter(F.col("k").isin([k for k, b in bucket_of.items() if b in moved]))
+        .withColumn("v", F.col("v") + 1000)
+    )
+    (
+        newer.withColumn("__bucket", key_bucket_expr(["k"], 16))
+        .repartition(2, "__bucket")
+        .write.partitionBy("__bucket")
+        .parquet(os.path.join(path, "e1"))
+    )
+    buckets = {str(b): (1 if b in moved else 0) for b in range(16) if b != popped}
+    with open(os.path.join(path, "MANIFEST"), "w") as f:
+        json.dump({
+            "epoch": 1, "buckets": buckets, "schema": json.dumps(base.schema.jsonValue()),
+            "retired": [], "flat": [0],
+        }, f)
+    expect = {k: (v + 1000 if bucket_of[k] in moved else v)
+              for k, v in ((k, k * 10) for k in range(40)) if bucket_of[k] != popped}
+
+    t = _BucketedMvTable(spark, path, ["k"])
+    got = t.read()
+    assert got.columns == ["k", "v"]
+    assert dict(map(tuple, got.collect())) == expect
+
+    k_new = next(k for k, b in bucket_of.items() if b in moved)
+    k_old = next(k for k, b in bucket_of.items() if b not in moved and b != popped)
+    k_pop = next(k for k, b in bucket_of.items() if b == popped)
+    keys = [k_new, k_old, k_pop]
+    ks = KeySet.of_arrow(pa.table({"k": pa.array(keys, pa.int64())}), ["k"], 16)
+    assert ks.buckets == sorted({bucket_of[k] for k in keys})
+    recomputed = spark.createDataFrame([(k, -k) for k in keys], "k long, v long")
+    log = t.splice(recomputed, ks, changelog=True)
+    assert sorted(map(tuple, log.select("k", "v", "__op").collect())) == sorted(
+        [(k, expect[k], -1) for k in (k_new, k_old)] + [(k, -k, 1) for k in keys]
+    )
+    expect.update({k: -k for k in keys})
+    assert dict(map(tuple, t.read().collect())) == expect
+    reopened = _BucketedMvTable(spark, path, ["k"])
+    assert dict(map(tuple, reopened.read().collect())) == expect
+    assert dict(map(tuple, reopened.read_buckets([bucket_of[k_pop]]).collect())) == {
+        k: v for k, v in expect.items() if bucket_of[k] == bucket_of[k_pop]
+    }
+    assert "flat" not in reopened._manifest
+    assert not [d for d in os.listdir(os.path.join(path, "e2")) if d.startswith("__bucket=")]
+
+
+def test_versioned_operator_state_adopted_on_open(spark, tmp_path):
+    """An `AppendOnlyGroupTopN` and an `EowcOverWindow` whose state was
+    written in the older `CURRENT` + `v{n}` layout reopen with their
+    rows: the top-k and the held/open rows and row-number seeds carry on
+    exactly as in a run that never stopped."""
+    import datetime
+
+    from risingwave_spark.streaming.mv import AppendOnlyGroupTopN
+    from risingwave_spark.streaming.over_window import EowcOverWindow
+
+    ranked = spark.createDataFrame(
+        [("a", 5, 1), ("a", 3, 2), ("b", 7, 3)], "g string, o long, id long"
+    )
+    sd = str(tmp_path / "topn")
+    _write_versioned(spark, os.path.join(sd, "topn"), ranked, 3)
+    topn = AppendOnlyGroupTopN(spark, sd, ["g"], "o", "id", 2)
+    assert sorted(os.listdir(os.path.join(sd, "topn"))) == ["MANIFEST", "e3"]
+    assert _rows(topn.result()) == sorted([("a", 5, 1, 1), ("a", 3, 2, 2), ("b", 7, 3, 1)])
+    topn.apply_batch(spark.createDataFrame([("a", 4, 4), ("b", 1, 5)], ranked.schema))
+    assert _rows(topn.result()) == sorted([
+        ("a", 5, 1, 1), ("a", 4, 4, 2), ("b", 7, 3, 1), ("b", 1, 5, 2)
+    ])
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def batch(*rows):  # (rid, k, v, seconds)
+        return spark.createDataFrame(
+            [(r, k, v, t0 + datetime.timedelta(seconds=s)) for r, k, v, s in rows],
+            "rid long, k long, v long, ts timestamp",
+        )
+
+    batches = [
+        batch((1, 1, 10, 0), (2, 1, 11, 5), (3, 1, 12, 10), (4, 2, 13, 10), (5, 1, 14, 20)),
+        batch((6, 1, 15, 40), (7, 2, 16, 45)),
+        batch((8, 1, 17, 90), (9, 2, 18, 95)),
+    ]
+
+    def open_eowc(d):
+        return EowcOverWindow(
+            spark, d, ["k"], "ts", ["ts"], "rid",
+            {"nxt": ("lead", "v"), "rn": ("row_number",)}, ["v", "rid"], delay_seconds=5,
+        )
+
+    ref = open_eowc(str(tmp_path / "ref"))
+    for b in batches:
+        ref.feed(b)
+    d = str(tmp_path / "eowc")
+    first = open_eowc(d)
+    first.feed(batches[0])
+    assert first.buffer.read().count() and first.seeds.read().count()
+    for name in ("buffer", "seeds"):
+        _write_versioned(spark, os.path.join(d, name), getattr(first, name).read(), 2)
+    again = open_eowc(d)
+    assert again.buffer.exists() and again.seeds.exists()
+    for b in batches[1:]:
+        again.feed(b)
+    cols = ["rid", "k", "v", "nxt", "rn"]
+    assert _rows(again.result().select(*cols)) == _rows(ref.result().select(*cols))
