@@ -434,8 +434,8 @@ class _BucketedMvTable:
         """Write `df` (the complete new content of `touched` buckets; pass
         None on first materialization to mean "all") as a new epoch, then
         flip the manifest — ONE Spark job. The epoch is plain coalesced
-        parquet (at most a file per touched bucket, and 8; no shuffle), so a
-        narrow batch writes few small files; the manifest maps every
+        parquet (at most one file per touched bucket and 8 in all; no
+        shuffle), so a narrow batch writes few files; the manifest maps every
         touched bucket to it, and readers filter it by the bucket expr,
         so a touched bucket with no rows in `df` simply reads empty.
         `before_flip(rows)`, if given, runs between the two with a frame
